@@ -125,15 +125,15 @@ def run_queries(spark) -> dict[str, float]:
 
 
 def bench_seen_bloom(spark) -> dict:
-    """SeenFilter bloom fast-path evidence: 4M-hash seen set over 32
+    """SeenFilter cuckoo fast-path evidence: 4M-hash seen set over 32
     shards, 55k candidates (5k true dups). Reports steady-state wall
     seconds plus shuffle-Exchange counts of each final plan. At this
     size the exact join survives locally only because AQE broadcasts
     the pruned 32 MB hash column (impossible at 10^10 hashes, where it
-    becomes a full seen-side shuffle); the bloom and cuckoo sidecar
-    paths stay a tiny broadcast + shard-pruned map-side probe at ANY
-    seen size — and are already ~1.4x faster here. Exactness parity is
-    pinned by tests/test_seen_bloom.py and tests/test_cuckoo.py."""
+    becomes a full seen-side shuffle); the cuckoo sidecar path stays a
+    tiny broadcast + shard-pruned map-side probe at ANY seen size. The
+    section keeps its historical ``seen_bloom`` key so earlier readings
+    stay comparable. Exactness parity is pinned by tests/test_cuckoo.py."""
     import shutil as _sh
 
     from pyspark.sql import functions as F
@@ -157,13 +157,11 @@ def bench_seen_bloom(spark) -> dict:
             F.concat(F.lit("https://h/u"), F.col("id")).alias("url"),
         ).cache()
         cands.count()
-        for mode, kind in (
-            ("exact", None), ("bloom", "bloom"), ("cuckoo", "cuckoo"),
-        ):
+        for mode, kind in (("exact", None), ("cuckoo", "cuckoo")):
             sf = SeenFilter(spark, f"{wd}/{mode}", n_shards=32, filter_kind=kind)
             for r in range(4):  # 4 delta rounds, like a real crawl tail
                 sf.add(base.filter(F.pmod("url_hash", F.lit(4)) == r), r)
-            sf.anti_join(cands).count()  # warm (bloom cache / code paths)
+            sf.anti_join(cands).count()  # warm (sidecar cache / code paths)
             t0 = time.perf_counter()
             res = sf.anti_join(cands)
             res.count()
@@ -410,7 +408,7 @@ def compact_result(full: dict) -> dict:
         "scaling": _sc(full.get("scaling") or {}),
         "submit_scaling": _sc(full.get("submit_scaling") or {}),
         "seen_bloom": {
-            k: seen[k] for k in ("exact_sec", "bloom_sec", "cuckoo_sec") if k in seen
+            k: seen[k] for k in ("exact_sec", "cuckoo_sec") if k in seen
         },
         # wall_sec already rides in queries["streaming_pass"]; rows/sec
         # is the parity headline, the rest lives in the sidecar

@@ -382,10 +382,6 @@ FROM documents
 """
 
 
-def q_text_lang_id(spark, sf_dir):
-    return _docs(spark, sf_dir).select("doc_id", lang_id("text").alias("detected_lang"))
-
-
 def _oracle_lang_id() -> str:
     hits = {lg: _sw_hits_sql(lg) for lg in STOPWORDS}
     best = "greatest(" + ", ".join(f"h_{lg}" for lg in STOPWORDS) + ")"
@@ -397,10 +393,6 @@ def _oracle_lang_id() -> str:
 WITH h AS (SELECT doc_id, {hit_cols} FROM documents)
 SELECT doc_id, CASE {cases} ELSE 'und' END AS detected_lang FROM h
 """
-
-
-def q_text_token_count(spark, sf_dir):
-    return _docs(spark, sf_dir).select("doc_id", token_count("text").alias("n_tokens"))
 
 
 ORACLE_TEXT_TOKEN_COUNT = f"""
@@ -979,7 +971,7 @@ UNION ALL
 SELECT 'bpe_encode_count', CAST(doc_id AS VARCHAR),
        length(replace(text, ' ', ''))
          + (length(text) - length(replace(text, ' ', '')) + 1)
-         - (length(text) - length(replace(text, 'ab', ''))) / 2,
+         - (length(text) - length(replace(text, 'ab', ''))) // 2,
        0
 FROM documents
 UNION ALL
@@ -993,7 +985,7 @@ FROM (VALUES ('ab', 0), ('abab', 1), ('a', 2), ('b', 3)) p(term, tf)
 UNION ALL
 SELECT 'uni_encode_count', CAST(doc_id AS VARCHAR),
        length(replace(text, ' ', ''))
-         - (length(text) - length(replace(text, 'ab', ''))) / 2,
+         - (length(text) - length(replace(text, 'ab', ''))) // 2,
        0
 FROM documents
 UNION ALL
@@ -1602,12 +1594,6 @@ SELECT node AS vec_id, component, csize,
        CAST(node = component AS INT) AS is_canonical
 FROM lab JOIN sz USING (component)
 """
-
-
-def q_text_fingerprint(spark, sf_dir):
-    return _docs(spark, sf_dir).select(
-        "doc_id", doc_fingerprint_portable("text").alias("fp")
-    )
 
 
 ORACLE_TEXT_FINGERPRINT = """
@@ -2770,19 +2756,6 @@ def _head_col():
     )
 
 
-def q_head_meta(spark, sf_dir):
-    from .functions.headpeek import head_section, head_title, meta_value
-
-    df = _docs(spark, sf_dir).withColumn("_head", head_section(_head_col()))
-    return df.select(
-        "doc_id",
-        head_title("_head").alias("title"),
-        meta_value("_head", "description").alias("description"),
-        meta_value("_head", "robots").alias("robots"),
-        meta_value("_head", "canonical").alias("canonical"),
-    )
-
-
 ORACLE_HEAD_META = f"""
 SELECT doc_id,
        {_TITLE_SQL} AS title,
@@ -2792,19 +2765,6 @@ SELECT doc_id,
             ELSE '' END AS canonical
 FROM documents
 """
-
-
-def q_head_seo(spark, sf_dir):
-    from .functions.headpeek import head_section, seo_score
-
-    df = _docs(spark, sf_dir).withColumn("_head", head_section(_head_col()))
-    url = F.expr("'https://example.com/p' || CAST(doc_id AS STRING)")
-    return df.select(
-        "doc_id",
-        F.round(seo_score("_head", url, keywords=["data", "spark"]), 6).alias(
-            "seo"
-        ),
-    )
 
 
 ORACLE_HEAD_SEO = f"""
@@ -2833,18 +2793,6 @@ SELECT doc_id,
              + 0.20 * s_r + 0.10 * s_s + 0.15 * s_u, 6) AS seo
 FROM s
 """
-
-
-def q_head_relevance(spark, sf_dir):
-    from .functions.headpeek import content_relevance_score, head_section
-
-    df = _docs(spark, sf_dir).withColumn("_head", head_section(_head_col()))
-    return df.select(
-        "doc_id",
-        F.round(content_relevance_score("_head", "spark data table"), 6).alias(
-            "relevance"
-        ),
-    )
 
 
 def _oracle_head_relevance() -> str:

@@ -16,10 +16,10 @@ Kaminsky, Mitzenmacher, CoNEXT 2014): f-bit fingerprints in buckets of
     i2 = i1 XOR H(fingerprint) mod m        (m a power of two)
 
 so either bucket index plus the stored fingerprint recovers the other —
-eviction (and deletion) never needs the original key. vs the bloom
-sidecar (seen.py): supports O(1) DELETE (bloom bits can't be unset), and
-lookup touches exactly 2 cache lines instead of k=7 scattered bits; cost
-is ~24 bits/key at the 0.84 target load vs bloom's 16.
+eviction (and deletion) never needs the original key. vs a bloom
+filter: supports O(1) DELETE (bloom bits can't be unset), and lookup
+touches exactly 2 cache lines instead of k scattered bits; cost is ~24
+bits/key at the 0.84 target load.
 
 Everything is vectorized numpy over the int64 xxhash64 column: build is
 two bulk greedy placement passes (sort + rank-within-bucket) with the
@@ -183,7 +183,8 @@ def contains(hashes: np.ndarray, m: int, table: np.ndarray) -> np.ndarray:
 
 def delete(hashes: np.ndarray, m: int, table: np.ndarray) -> np.ndarray:
     """Remove one stored fingerprint per present hash (cuckoo's headline
-    capability vs bloom). Returns the mask of hashes actually removed."""
+    capability vs a bloom filter). Returns the mask of hashes actually
+    removed."""
     hv = np.asarray(hashes, dtype=np.int64)
     fp = _fingerprints(hv)
     i1 = _bucket1(hv, m)
@@ -202,7 +203,8 @@ def delete(hashes: np.ndarray, m: int, table: np.ndarray) -> np.ndarray:
 def test_any(hashes: np.ndarray,
              filters: list[tuple[int, int, np.ndarray]]) -> np.ndarray:
     """True where a hash might be in ANY of the (m, slots, table-bytes)
-    sidecar rows — mirrors seen._bloom_test_any's short-circuit shape."""
+    sidecar rows (seen.SIDECAR_SCHEMA); hashes already found skip the
+    remaining tables."""
     out = np.zeros(len(hashes), dtype=bool)
     for m, _slots, raw in filters:
         pending = ~out

@@ -177,15 +177,12 @@ class CrawlConfig:
     # read/write anti-joins against a shared crawl_results table.
     cache_mode: str = "bypass"
     cache_path: str | None = None
-    # bloom fast path in front of the seen anti-join (exactness
-    # preserved: bloom has no false negatives; "maybe" rows still go
+    # seen-set prefilter: "cuckoo" puts the north_star's partitioned
+    # cuckoo filter (operators/cuckoo.py) in front of the seen anti-join
+    # (exactness preserved: no false negatives; "maybe" rows still go
     # through the exact join). Wins when |seen| >> |candidates| — the
     # steady state of a long crawl; at toy scale the exact join alone
-    # is faster, so default off.
-    seen_bloom: bool = False
-    # explicit sidecar codec: "bloom" | "cuckoo" | None (None + seen_bloom
-    # → "bloom"). "cuckoo" is the north_star's partitioned cuckoo-filter
-    # seen set (operators/cuckoo.py) — same topology, deletable filter.
+    # is faster, so default None (exact join only).
     seen_filter_kind: str | None = None
     # spider-trap admission filter (filters.is_crawler_trap): drop
     # repeated-segment / calendar-walk / param-explosion URLs before
@@ -237,7 +234,6 @@ class CrawlConfig:
             "strategy": self.strategy,
             "batch_size": self.batch_size,
             "cache_mode": self.cache_mode,
-            "seen_bloom": self.seen_bloom,
             "seen_filter_kind": self.seen_filter_kind,
             "priority_aging": self.priority_aging,
             "trap_filter": self.trap_filter,
@@ -464,7 +460,6 @@ class CrawlRun:
         self.config = config or CrawlConfig()
         self.seen = SeenFilter(
             spark, workdir, self.config.n_shards,
-            use_bloom=self.config.seen_bloom,
             filter_kind=self.config.seen_filter_kind,
         )
         self.politeness = PolitenessState(spark, workdir)
@@ -781,8 +776,7 @@ class CrawlRun:
 
         for partial_delta in (
             os.path.join(self.workdir, "url_seen", f"round={r + 1}"),
-            os.path.join(self.workdir, "url_seen_blooms", f"round={r + 1}"),
-            os.path.join(self.workdir, "url_seen_cuckoo", f"round={r + 1}"),
+            os.path.join(self.seen.sidecar_path, f"round={r + 1}"),
         ):
             if os.path.exists(partial_delta):
                 shutil.rmtree(partial_delta)
@@ -1276,7 +1270,7 @@ class CrawlRun:
             .drop("_rn")
         )
 
-        if self.seen.use_bloom:
+        if self.seen.filter_kind is not None:
             # the sidecar prefilter splits `deduped` twice (definite-new
             # / maybe-seen) and collects the maybe-side shard list;
             # persist so the link-discovery plan runs once
@@ -1371,7 +1365,7 @@ class CrawlRun:
             )
         self.seen.add(seen_delta, r + 1, assume_unique=True)
         budgeted.unpersist(blocking=False)
-        if self.seen.use_bloom:
+        if self.seen.filter_kind is not None:
             deduped.unpersist(blocking=False)
 
         # politeness fold
@@ -1476,7 +1470,7 @@ class CrawlRun:
         north star checkpoints "cuckoo filter shards, frontier offsets,
         politeness counters" to Iceberg snapshots; here that is the
         url_seen delta, the next-round frontier, and the politeness
-        state dir (seen-filter bloom/cuckoo sidecars are derived data,
+        state dir (seen-filter cuckoo sidecars are derived data,
         rebuilt from the deltas they index). Idempotent across
         crash-rerun: a round that died after adoption but before its
         manifest re-runs in place, so stale snapshots with
@@ -1597,8 +1591,10 @@ class CrawlRun:
             # forgets them — the replay re-derives identical contents
             shutil.rmtree(self._robots_path(r), ignore_errors=True)
             shutil.rmtree(self._alias_path(r), ignore_errors=True)
+            # the sidecar path does not depend on filter_kind: a crawl
+            # run with the prefilter may be rewound by a run without it
             shutil.rmtree(
-                os.path.join(self.seen.bloom_path, f"round={r + 1}"),
+                os.path.join(self.seen.sidecar_path, f"round={r + 1}"),
                 ignore_errors=True)
         self.seen.invalidate_cache()
         if self.config.snapshot_tables:

@@ -15,19 +15,18 @@ Spark design for a 10^10-URL frontier:
 - the per-round membership test is ONE co-partitioned left-anti join on
   url_hash: candidate links are repartitioned by the same shard
   function, so each task joins against exactly one shard.
-- **probabilistic fast path** (``filter_kind="bloom" | "cuckoo"``):
-  each round's delta also writes a per-shard filter sidecar
-  (``url_seen_blooms/round=N`` or ``url_seen_cuckoo/round=N``). The
-  cuckoo codec (operators/cuckoo.py) is the north_star's named
-  structure — same topology, plus O(1) delete for retired URLs.
+- **probabilistic fast path** (``filter_kind="cuckoo"``): each round's
+  delta also writes a per-shard cuckoo-filter sidecar
+  (``url_seen_cuckoo/round=N``; codec in operators/cuckoo.py — the
+  north_star's named structure, deletable for retired URLs).
   ``anti_join`` then tests every candidate against the OR of its
-  shard's blooms in one Arrow-batched numpy kernel; candidates the
-  bloom rejects are *definitely* unseen (no false negatives) and skip
+  shard's filters in one Arrow-batched numpy kernel; candidates the
+  filter rejects are *definitely* unseen (no false negatives) and skip
   the join entirely, and the exact join runs only for the "maybe" rows
   against only the shards they map to (file-pruned). Exactness is
-  preserved — the bloom is a prefilter, never the verdict. In
+  preserved — the filter is a prefilter, never the verdict. In
   production the sidecars are executor-side broadcast variables; at
-  10^10 URLs with 16 bits/key they total ~20 GB across 32 shards, so
+  10^10 URLs with ~24 bits/key they total ~30 GB across 32 shards, so
   each executor holds only the shards its tasks touch.
 - exactness of the hash key: 64-bit (pair-collision odds ~3e-9 at 1e10
   URLs); a production deployment confirms collisions against the full
@@ -43,98 +42,48 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-SEEN_SCHEMA = "url_hash bigint, url string, shard int"
-BLOOM_SCHEMA = "shard int, m long, k int, bits binary"
+from . import cuckoo
 
-BLOOM_BITS_PER_KEY = 16
-BLOOM_K = 7  # probes; with 16 bits/key the false-positive rate ~1e-3
+SEEN_SCHEMA = "url_hash bigint, url string, shard int"
+# one cuckoo table per (round, shard): k = slots per bucket, bits = the
+# uint16 table bytes (operators/cuckoo.test_any reads these rows)
+SIDECAR_SCHEMA = "shard int, m long, k int, bits binary"
+SIDECAR_DIR = "url_seen_cuckoo"
 
 
 def shard_of(url_hash_col, n_shards: int):
     return F.pmod(url_hash_col, F.lit(n_shards)).cast("int")
 
 
-def _bloom_probes(hashes: np.ndarray, m: int, k: int) -> np.ndarray:
-    """(n, k) probe indices via double hashing on the 64-bit url_hash."""
-    h = hashes.astype(np.int64).view(np.uint64)
-    h1 = h & np.uint64(0xFFFFFFFF)
-    h2 = (h >> np.uint64(32)) | np.uint64(1)
-    i = np.arange(k, dtype=np.uint64)
-    return ((h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m)).astype(np.int64)
-
-
-def _bloom_build(hashes: np.ndarray, bits_per_key: int = BLOOM_BITS_PER_KEY,
-                 k: int = BLOOM_K) -> tuple[int, int, bytes]:
-    m = max(1024, bits_per_key * len(hashes))
-    bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-    idx = _bloom_probes(hashes, m, k).ravel()
-    np.bitwise_or.at(bits, idx >> 3, np.uint8(1) << (idx & 7).astype(np.uint8))
-    return m, k, bits.tobytes()
-
-
-def _bloom_test_any(hashes: np.ndarray,
-                    blooms: list[tuple[int, int, np.ndarray]]) -> np.ndarray:
-    """True where a hash MIGHT be in any of the bloom filters."""
-    out = np.zeros(len(hashes), dtype=bool)
-    for m, k, bits in blooms:
-        pending = ~out
-        if not pending.any():
-            break
-        idx = _bloom_probes(hashes[pending], m, k)
-        hit = ((bits[idx >> 3] >> (idx & 7).astype(np.uint8)) & 1).all(axis=1)
-        out[pending] = hit
-    return out
-
-
-def _cuckoo_build_row(hashes: np.ndarray) -> tuple[int, int, bytes]:
-    from . import cuckoo
-
-    m, table = cuckoo.build(hashes)
-    return m, cuckoo.SLOTS, table.tobytes()
-
-
-def _cuckoo_test_any(hashes: np.ndarray, filters: list) -> np.ndarray:
-    from . import cuckoo
-
-    return cuckoo.test_any(hashes, filters)
-
-
-# sidecar codecs: build(hashes) -> (m, k, bytes); test(hashes, rows) ->
-# maybe-mask; per-kind sidecar directory. "bloom" = 16 bits/key k=7
-# double-hashed bitset; "cuckoo" = the north_star's partitioned cuckoo
-# filter (operators/cuckoo.py — Fan et al. 2014; supports delete).
-SIDE_CODECS = {
-    "bloom": (_bloom_build, _bloom_test_any, "url_seen_blooms"),
-    "cuckoo": (_cuckoo_build_row, _cuckoo_test_any, "url_seen_cuckoo"),
-}
+def _sidecar_row(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One shard's sidecar row, built from its written delta rows."""
+    m, table = cuckoo.build(pdf["url_hash"].to_numpy(dtype=np.int64))
+    return pd.DataFrame(
+        {"shard": [int(pdf["shard"].iloc[0])], "m": [m],
+         "k": [cuckoo.SLOTS], "bits": [table.tobytes()]}
+    )
 
 
 class SeenFilter:
     """Parquet-backed sharded seen set with per-round append deltas."""
 
     def __init__(self, spark: SparkSession, workdir: str, n_shards: int = 32,
-                 use_bloom: bool = False, filter_kind: str | None = None):
-        if filter_kind is None and use_bloom:
-            filter_kind = "bloom"
-        if filter_kind is not None and filter_kind not in SIDE_CODECS:
+                 filter_kind: str | None = None):
+        if filter_kind not in (None, "cuckoo"):
             raise ValueError(f"unknown filter_kind {filter_kind!r}")
         self.spark = spark
         self.path = os.path.join(workdir, "url_seen")
         self.filter_kind = filter_kind
-        self._build_fn, self._test_fn, side_dir = SIDE_CODECS[
-            filter_kind or "bloom"
-        ]
-        self.bloom_path = os.path.join(workdir, side_dir)
+        self.sidecar_path = os.path.join(workdir, SIDECAR_DIR)
         self.n_shards = n_shards
-        self.use_bloom = filter_kind is not None
-        # per-round bloom cache + its broadcast: only NEW delta rounds
+        # per-round sidecar cache + its broadcast: only NEW delta rounds
         # are read from disk, and the broadcast is rebuilt only when the
-        # round set changes (production: executors hold the blooms and
+        # round set changes (production: executors hold the filters and
         # new increments stream in — reloading the full set per query
         # would dominate the fast path it exists to provide)
-        self._bloom_rounds: dict[int, dict[int, list]] = {}
-        self._bloom_bc = None
-        self._bloom_bc_key: tuple = ()
+        self._side_rounds: dict[int, dict[int, list]] = {}
+        self._side_bc = None
+        self._side_bc_key: tuple = ()
 
     def _rounds(self, path: str) -> set[int]:
         if not os.path.exists(path):
@@ -164,51 +113,60 @@ class SeenFilter:
             "url_hash", "url", F.col("shard").cast("int").alias("shard")
         )
 
-    def _load_blooms(self) -> dict[int, list[tuple[int, int, np.ndarray]]] | None:
-        """Per-shard bloom list, or None when sidecars don't cover every
+    def _load_sidecars(self) -> dict[int, list[tuple[int, int, np.ndarray]]] | None:
+        """Per-shard sidecar list, or None when sidecars don't cover every
         delta round (falling back to the exact join keeps exactness).
         Incremental: rounds already cached are not re-read."""
         rounds = self._rounds(self.path)
-        if rounds != self._rounds(self.bloom_path):
+        if rounds != self._rounds(self.sidecar_path):
             return None
-        self._bloom_rounds = {
-            r: v for r, v in self._bloom_rounds.items() if r in rounds
+        self._side_rounds = {
+            r: v for r, v in self._side_rounds.items() if r in rounds
         }
-        for r in sorted(rounds - set(self._bloom_rounds)):
-            rp = os.path.join(self.bloom_path, f"round={r}")
+        for r in sorted(rounds - set(self._side_rounds)):
+            rp = os.path.join(self.sidecar_path, f"round={r}")
             per_round: dict[int, list] = {}
             if self._has_data(rp):
-                pdf = self.spark.read.schema(BLOOM_SCHEMA).parquet(rp).toPandas()
+                pdf = self.spark.read.schema(SIDECAR_SCHEMA).parquet(rp).toPandas()
                 for row in pdf.itertuples():
                     per_round.setdefault(int(row.shard), []).append(
                         (int(row.m), int(row.k),
                          np.frombuffer(row.bits, dtype=np.uint8))
                     )
-            self._bloom_rounds[r] = per_round
+            self._side_rounds[r] = per_round
         merged: dict[int, list] = {}
-        for per_round in self._bloom_rounds.values():
+        for per_round in self._side_rounds.values():
             for shard, lst in per_round.items():
                 merged.setdefault(shard, []).extend(lst)
         return merged
+
+    def _drop_broadcast(self) -> None:
+        if self._side_bc is not None:
+            self._side_bc.unpersist(blocking=False)
+        self._side_bc = None
+        self._side_bc_key = ()
 
     def invalidate_cache(self) -> None:
         """Drop the in-memory per-round filter cache + broadcast — must
         be called when delta rounds are REMOVED from disk (rewind): the
         merge step unions every cached round, so a stale cached round
         would keep marking its URLs as seen."""
-        self._bloom_rounds.clear()
-        if self._bloom_bc is not None:
-            self._bloom_bc.unpersist(blocking=False)
-        self._bloom_bc = None
-        self._bloom_bc_key = ()
+        self._side_rounds.clear()
+        self._drop_broadcast()
 
-    def _bloom_broadcast(self, blooms: dict, rounds_key: tuple):
-        if self._bloom_bc is None or self._bloom_bc_key != rounds_key:
-            if self._bloom_bc is not None:
-                self._bloom_bc.unpersist(blocking=False)
-            self._bloom_bc = self.spark.sparkContext.broadcast(blooms)
-            self._bloom_bc_key = rounds_key
-        return self._bloom_bc
+    def _broadcast(self, filters: dict, rounds_key: tuple):
+        if self._side_bc is None or self._side_bc_key != rounds_key:
+            self._drop_broadcast()
+            self._side_bc = self.spark.sparkContext.broadcast(filters)
+            self._side_bc_key = rounds_key
+        return self._side_bc
+
+    def _exact_anti_join(self, candidates: DataFrame,
+                         url_hash_col: str) -> DataFrame:
+        seen = self.load().select(F.col("url_hash").alias("__seen_hash"))
+        return candidates.join(
+            seen, F.col(url_hash_col) == F.col("__seen_hash"), "left_anti"
+        )
 
     def anti_join(self, candidates: DataFrame, url_hash_col: str = "url_hash") -> DataFrame:
         """Rows of ``candidates`` whose url_hash is NOT in the seen set.
@@ -216,34 +174,24 @@ class SeenFilter:
         Exact path: one hash-partitioned left-anti join (the seen side is
         pre-sharded on disk; bucketed Iceberg: zero seen-side shuffle).
 
-        Bloom path (``use_bloom``): definite-new rows skip the join;
-        maybe-seen rows join against only their shards (file-pruned).
+        Cuckoo path (``filter_kind="cuckoo"``): definite-new rows skip
+        the join; maybe-seen rows join against only their shards
+        (file-pruned).
         """
-        if not self.use_bloom:
-            seen = self.load().select(F.col("url_hash").alias("__seen_hash"))
-            return candidates.join(
-                seen,
-                F.col(url_hash_col) == F.col("__seen_hash"),
-                "left_anti",
-            )
+        if self.filter_kind is None:
+            return self._exact_anti_join(candidates, url_hash_col)
 
-        blooms = self._load_blooms()
-        if not blooms:  # no deltas yet, sidecars incomplete, or empty set
-            if blooms == {} and not self._has_data(self.path):
+        filters = self._load_sidecars()
+        if not filters:  # no deltas yet, sidecars incomplete, or empty set
+            if filters == {} and not self._has_data(self.path):
                 return candidates  # provably empty seen set
-            seen = self.load().select(F.col("url_hash").alias("__seen_hash"))
-            return candidates.join(
-                seen, F.col(url_hash_col) == F.col("__seen_hash"), "left_anti"
-            )
+            return self._exact_anti_join(candidates, url_hash_col)
 
         n_shards = self.n_shards
-        bc = self._bloom_broadcast(
-            blooms, tuple(sorted(self._rounds(self.path)))
-        )
-        # bind the codec's test fn locally: closing over self would
-        # pickle the SeenFilter (and its SparkSession) into the UDF
-        test_fn = self._test_fn
+        bc = self._broadcast(filters, tuple(sorted(self._rounds(self.path))))
 
+        # closes over locals only: touching self would pickle the
+        # SeenFilter (and its SparkSession) into the UDF
         @F.pandas_udf("boolean")
         def maybe_seen(h: pd.Series) -> pd.Series:
             hv = h.to_numpy(dtype=np.int64)
@@ -251,13 +199,13 @@ class SeenFilter:
             out = np.zeros(len(hv), dtype=bool)
             table = bc.value
             for s in np.unique(shards):
-                bl = table.get(int(s))
-                if bl:
+                rows = table.get(int(s))
+                if rows:
                     sel = shards == s
-                    out[sel] = test_fn(hv[sel], bl)
+                    out[sel] = cuckoo.test_any(hv[sel], rows)
             return pd.Series(out)
 
-        # the bloom shrinks the candidate side to the tiny "maybe" set,
+        # the filter shrinks the candidate side to the tiny "maybe" set,
         # which unlocks a zero-shuffle topology: collect the maybe
         # hashes (callers persist `candidates` when their plan is
         # expensive), probe the shard-pruned seen scan MAP-SIDE (the
@@ -274,12 +222,9 @@ class SeenFilter:
         if not maybe_hashes:
             return cand.drop("__maybe")
         if len(maybe_hashes) > 2_000_000:
-            # driver-memory guard: giant maybe sets (bloom barely
+            # driver-memory guard: giant maybe sets (filter barely
             # filtering) degrade to the plain co-partitioned anti-join
-            seen = self.load().select(F.col("url_hash").alias("__seen_hash"))
-            return candidates.join(
-                seen, F.col(url_hash_col) == F.col("__seen_hash"), "left_anti"
-            )
+            return self._exact_anti_join(candidates, url_hash_col)
         touched = sorted({h % n_shards for h in maybe_hashes})
         probe = self.spark.createDataFrame(
             [(h,) for h in maybe_hashes], "url_hash bigint"
@@ -303,8 +248,8 @@ class SeenFilter:
 
         One subdir per round, overwritten (not appended) so a crashed
         round can be re-run idempotently; directory-partitioned by
-        shard. With ``use_bloom``, a per-shard bloom sidecar is built
-        from the written delta (one extra small job per round).
+        shard. With ``filter_kind="cuckoo"``, a per-shard cuckoo sidecar
+        is built from the written delta (one extra small job per round).
 
         ``assume_unique=True`` skips the defensive dropDuplicates
         exchange — for callers whose rows are unique by url_hash by
@@ -324,36 +269,22 @@ class SeenFilter:
         delta_path = os.path.join(self.path, f"round={round_no}")
         delta.write.partitionBy("shard").mode("overwrite").parquet(delta_path)
 
-        if self.use_bloom:
-            build_fn = self._build_fn  # local bind — see maybe_seen
-
-            def build(pdf: pd.DataFrame) -> pd.DataFrame:
-                hashes = pdf["url_hash"].to_numpy(dtype=np.int64)
-                m, k, bits = build_fn(hashes)
-                return pd.DataFrame(
-                    {"shard": [int(pdf["shard"].iloc[0])], "m": [m],
-                     "k": [k], "bits": [bits]}
-                )
-
+        if self.filter_kind is not None:
             # explicit schema: an empty delta dir has no files to infer
             # from (shard maps from the partition directories)
             written = self.spark.read.schema(SEEN_SCHEMA).parquet(delta_path)
             written.groupBy("shard").applyInPandas(
-                build, schema=BLOOM_SCHEMA
+                _sidecar_row, schema=SIDECAR_SCHEMA
             ).coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(self.bloom_path, f"round={round_no}")
+                os.path.join(self.sidecar_path, f"round={round_no}")
             )
             # this round's sidecar may have REPLACED one already cached
             # (a crashed round re-run writes different hashes under the
             # same round number): evict it and force a broadcast rebuild,
             # or the stale filter would mark the new URLs definitely-
             # unseen and re-admit them past the exact join
-            if round_no in self._bloom_rounds:
-                del self._bloom_rounds[round_no]
-                if self._bloom_bc is not None:
-                    self._bloom_bc.unpersist(blocking=False)
-                self._bloom_bc = None
-                self._bloom_bc_key = ()
+            if self._side_rounds.pop(round_no, None) is not None:
+                self._drop_broadcast()
 
     def count(self) -> int:
         return self.load().count()

@@ -4,10 +4,12 @@ Runs every ``__spark_entry__.queries()`` entry on a VANILLA SparkSession
 (``SparkSession.builder.master(...).getOrCreate()`` — none of the repo's
 ``get_spark`` confs, the way the correctness driver builds its session)
 against its DuckDB oracle at the given sf dir, comparing row count,
-sorted column list, and exact values (the driver's canonicalization:
-sort columns by name, stringify objects, round floats, sort rows).
+sorted column list, and exact rendered values (the driver's
+canonicalization: sort columns by name, stringify objects, round
+floats, sort rows — and compare each value as rendered, so the type shows:
+a BIGINT ``840`` and a DOUBLE ``840.0`` are different values).
 
-Usage:  python scripts/correctness_replica.py [sf_dir]
+Usage:  python scripts/correctness_replica.py [sf_dir] [query ...]
 
 Exits non-zero and prints one line per mismatching query; prints a
 single OK summary line otherwise. This is the pre-flight the r4
@@ -20,10 +22,11 @@ class before the driver does.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -31,22 +34,28 @@ TABLES = [
 ]
 
 
-def _canon(df):
+def _canon(df) -> tuple[list[str], list[tuple[str, ...]]]:
+    """(sorted column names, sorted rows of rendered cells).
+
+    Floats are rounded, then rendered with ``repr`` (``840.0``); ints
+    render without a decimal point (``840``), so a column whose type
+    differs between engine and oracle fails even when every value is
+    numerically equal. Objects are stringified."""
     import pandas as pd
 
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].astype(str)
-        elif pd.api.types.is_float_dtype(df[c]):
-            df[c] = df[c].round(9)
-        elif pd.api.types.is_integer_dtype(df[c]):
-            df[c] = df[c].astype("int64")
-        elif pd.api.types.is_bool_dtype(df[c]):
-            df[c] = df[c].astype(bool)
-    return df.sort_values(by=list(df.columns), kind="mergesort").reset_index(
-        drop=True
-    )
+    cols = sorted(df.columns)
+    rendered = []
+    for c in cols:
+        s = df[c]
+        if pd.api.types.is_bool_dtype(s):
+            rendered.append([str(bool(v)) for v in s])
+        elif pd.api.types.is_integer_dtype(s):
+            rendered.append([str(int(v)) if pd.notna(v) else "None" for v in s])
+        elif pd.api.types.is_float_dtype(s):
+            rendered.append([repr(float(v)) for v in s.round(9)])
+        else:
+            rendered.append([str(v) for v in s])
+    return cols, sorted(zip(*rendered)) if cols else []
 
 
 def main() -> int:
@@ -54,7 +63,6 @@ def main() -> int:
     only = set(sys.argv[2:])  # optional query-name filter
 
     import duckdb
-    import pandas as pd
     from pyspark.sql import SparkSession
 
     spark = (
@@ -86,29 +94,31 @@ def main() -> int:
             failures.append(f"{name}: SPARK ERR {traceback.format_exc(limit=3)}")
             continue
         if name not in oracles:
-            print(json.dumps({"q": name, "rows": len(got), "oracle": None}))
+            print(json.dumps({"q": name, "rows": len(got[1]), "oracle": None}))
             continue
         try:
             want = _canon(con.sql(oracles[name]).df())
         except Exception:
             failures.append(f"{name}: ORACLE ERR {traceback.format_exc(limit=3)}")
             continue
-        if list(got.columns) != list(want.columns):
+        (got_cols, got_rows), (want_cols, want_rows) = got, want
+        if got_cols != want_cols:
+            failures.append(f"{name}: columns {got_cols} != {want_cols}")
+            continue
+        if len(got_rows) != len(want_rows):
+            failures.append(f"{name}: rows {len(got_rows)} != {len(want_rows)}")
+            continue
+        diff = next(
+            (i for i, (g, w) in enumerate(zip(got_rows, want_rows)) if g != w),
+            None,
+        )
+        if diff is not None:
             failures.append(
-                f"{name}: columns {list(got.columns)} != {list(want.columns)}"
+                f"{name}: values differ at sorted row {diff} — "
+                f"spark {got_rows[diff]} != oracle {want_rows[diff]}"[:300]
             )
             continue
-        if len(got) != len(want):
-            failures.append(f"{name}: rows {len(got)} != {len(want)}")
-            continue
-        try:
-            pd.testing.assert_frame_equal(
-                got, want, check_dtype=False, rtol=0, atol=0
-            )
-        except AssertionError as exc:
-            failures.append(f"{name}: values differ — {str(exc)[:300]}")
-            continue
-        print(json.dumps({"q": name, "rows": len(got), "match": True}))
+        print(json.dumps({"q": name, "rows": len(got_rows), "match": True}))
 
     spark.stop()
     n_run = len(only & set(queries)) if only else len(queries)

@@ -60,9 +60,8 @@ def _full_result() -> dict:
         },
         "seen_bloom": {
             "seen_rows": 4_000_000, "candidates": 55_000, "true_dups": 5_000,
-            "exact_sec": 2.143, "bloom_sec": 1.381, "cuckoo_sec": 1.192,
-            "exact_shuffle_exchanges": 0, "bloom_shuffle_exchanges": 0,
-            "cuckoo_shuffle_exchanges": 0,
+            "exact_sec": 2.143, "cuckoo_sec": 1.192,
+            "exact_shuffle_exchanges": 0, "cuckoo_shuffle_exchanges": 0,
         },
         "streaming": {
             "cpus": 32, "n_rows": 40_000, "expected": 40_000, "batches": 8,

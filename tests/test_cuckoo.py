@@ -3,7 +3,9 @@
 The north_star names "a partitioned cuckoo-filter URL-seen set
 (canonicalized URL -> xxhash64 fingerprint)"; these tests pin the three
 filter guarantees (no false negatives, bounded false-positive rate,
-working delete) and the anti-join parity with the exact path.
+working delete) and the parity of the cuckoo-prefiltered seen set with
+the exact path: anti-join, shard pruning, same-round rewrite, and a
+3-round crawl.
 """
 
 from __future__ import annotations
@@ -102,13 +104,86 @@ def test_cuckoo_anti_join_matches_exact(spark, tmp_path):
     got_exact = {r["url_hash"] for r in exact.anti_join(cands).collect()}
     got_ck = {r["url_hash"] for r in ck.anti_join(cands).collect()}
     assert got_ck == got_exact == set(range(4000, 5000))
-    # the cuckoo sidecar directory is what got written (not blooms)
+    # the cuckoo sidecar directory is what got written
     assert (tmp_path / "b" / "url_seen_cuckoo").exists()
 
 
 def test_unknown_filter_kind_rejected(spark, tmp_path):
-    with pytest.raises(ValueError):
-        SeenFilter(spark, str(tmp_path), filter_kind="quotient")
+    # cuckoo is the only sidecar codec; "bloom" is rejected like any other
+    for kind in ("quotient", "bloom"):
+        with pytest.raises(ValueError):
+            SeenFilter(spark, str(tmp_path), filter_kind=kind)
+
+
+def test_cuckoo_shard_skip(spark, tmp_path):
+    """Candidates that all map to one shard must read only that shard's
+    files in the exact-confirm join (directory partition pruning)."""
+    sf = SeenFilter(spark, str(tmp_path / "c"), n_shards=8,
+                    filter_kind="cuckoo")
+    sf.add(_mk_rows(spark, range(4000)), 0)
+
+    # candidates confined to shard 3: url_hash % 8 == 3 (pmod semantics)
+    cand_ids = [8 * i + 3 for i in range(200, 400)]
+    cands = _mk_rows(spark, cand_ids)
+    out = sf.anti_join(cands)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    new = {r["url_hash"] for r in out.collect()}
+    assert new == {i for i in cand_ids if i >= 4000}
+    # the seen-side scan carries the shard partition filter
+    assert "shard" in plan and ("PartitionFilters" in plan or "isin" in plan.lower())
+
+
+def test_same_round_rewrite_invalidates_sidecar_cache(spark, tmp_path):
+    """A crashed round re-run overwrites its delta+sidecar under the
+    SAME round number. The in-memory per-round filter cache must evict
+    that round (and rebuild the broadcast), or the stale filter marks
+    the rewritten URLs definitely-unseen and re-admits them past the
+    exact join."""
+    sf = SeenFilter(spark, str(tmp_path), n_shards=4, filter_kind="cuckoo")
+    sf.add(_mk_rows(spark, range(100)), round_no=0)
+    # prime the cache
+    assert sf.anti_join(_mk_rows(spark, range(100, 120))).count() == 20
+    # same-round rewrite with DIFFERENT hashes (live refetch divergence)
+    sf.add(_mk_rows(spark, range(200, 300)), round_no=0)
+    # the rewritten hashes must test as seen (stale cache would pass them)
+    assert sf.anti_join(_mk_rows(spark, range(200, 220))).count() == 0
+
+
+def test_crawl_with_cuckoo_matches_exact(spark, sf_dir, tmp_path):
+    """A 3-round crawl is identical with and without the cuckoo
+    prefilter: same manifests (minus wall time and config), same
+    results."""
+    from crawl4ai_spark.operators.frontier import (
+        CrawlConfig,
+        CrawlRun,
+        run_crawl,
+    )
+    from crawl4ai_spark.synth import generate_pages, page_url
+
+    pages = generate_pages(spark, sf_dir)
+    langs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "lang"
+    ).collect()
+    lang_of = {r["doc_id"]: r["lang"] for r in langs}
+    seeds = [page_url(i, lang_of[i]) for i in (1, 2, 3)]
+
+    cols = ["url", "round", "depth", "success", "n_links"]
+    runs = {}
+    for name, kind in (("exact", None), ("cuckoo", "cuckoo")):
+        wd = str(tmp_path / name)
+        cfg = CrawlConfig(
+            max_depth=2, round_seconds=8.0, seen_filter_kind=kind
+        )
+        ms = run_crawl(spark, pages, seeds, wd, cfg, max_rounds=3)
+        res = CrawlRun(spark, pages, wd, cfg).results()
+        runs[name] = (
+            [
+                {k: v for k, v in m.items() if k not in ("wall_s", "config")}
+                for m in ms
+            ],
+            sorted(map(tuple, res.select(*cols).collect())),
+        )
+    assert runs["cuckoo"] == runs["exact"]
 
 
 def test_build_tolerates_structured_keys():

@@ -574,7 +574,7 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
              pages.select("url").orderBy("url").limit(5).collect()]
     wd = str(tmp_path / "c")
     cfg = CrawlConfig(max_depth=3, round_seconds=1e6, snapshot_tables=True,
-                      seen_filter_kind="bloom")
+                      seen_filter_kind="cuckoo")
     run_crawl(spark, pages, seeds, wd, cfg, max_rounds=3)
     run = CrawlRun(spark, pages, wd, cfg)
     last = run.latest_completed_round()
@@ -632,6 +632,17 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
         run.manifest(i)
     run.run(max_rounds=last + 1)
     assert fingerprint() == before
+
+    # a run WITHOUT the prefilter rewinding this workdir must drop the
+    # forgotten rounds' cuckoo sidecars too: a stale sidecar would mark
+    # the URLs of a rewritten delta definitely-unseen
+    def round_dirs(name):
+        return sorted(d for d in os.listdir(os.path.join(wd, name))
+                      if d.startswith("round="))
+
+    plain = CrawlConfig(max_depth=3, round_seconds=1e6, snapshot_tables=True)
+    CrawlRun(spark, pages, wd, plain).rewind_to_round(1)
+    assert round_dirs("url_seen_cuckoo") == round_dirs("url_seen")
 
 
 def test_per_host_admission_quota(spark, sf_dir, tmp_path):
