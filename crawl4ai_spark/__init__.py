@@ -15,4 +15,10 @@ only pyspark.sql.functions expressions and Arrow-batched pandas UDFs /
 mapInPandas.
 """
 
+from crawl4ai_spark import zipguard as _zipguard
+
 __version__ = "0.1.0"
+
+# workers import this package to unpickle any engine UDF: skip their
+# per-task zip directory re-reads (a no-op on the driver)
+_zipguard.install()

@@ -60,6 +60,10 @@ def per_partition_metrics(extracted):
     def probe(it):
         from pyspark import TaskContext
 
+        # the engine arrives at task time (--py-files): importing it here
+        # must still install the worker's zip re-read guard
+        from crawl4ai_spark.zipguard import installed
+
         t0 = time.perf_counter()
         n = 0
         for batch in it:
@@ -68,11 +72,16 @@ def per_partition_metrics(extracted):
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         yield __import__("pandas").DataFrame(
-            {"partition_id": [pid], "n_urls": [n], "wall_sec": [round(wall, 3)]}
+            {
+                "partition_id": [pid],
+                "n_urls": [n],
+                "wall_sec": [round(wall, 3)],
+                "zip_guard": [installed()],
+            }
         )
 
     return extracted.mapInPandas(
-        probe, "partition_id int, n_urls long, wall_sec double"
+        probe, "partition_id int, n_urls long, wall_sec double, zip_guard boolean"
     )
 
 
@@ -146,6 +155,7 @@ def main() -> None:
             "partition_urls_min": min(p["n_urls"] for p in parts),
             "partition_urls_max": max(p["n_urls"] for p in parts),
             "partition_wall_max": max(p["wall_sec"] for p in parts),
+            "zip_guard": all(r["zip_guard"] for r in metrics),
             "partitions": parts,
         }
         line = json.dumps(result)

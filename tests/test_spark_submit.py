@@ -37,3 +37,6 @@ def test_spark_submit_pyfiles_job_runs_and_logs_partitions(tmp_path):
     assert res["partition_urls_min"] > 0
     assert sum(p["n_urls"] for p in res["partitions"]) == res["n_urls"]
     assert all(p["wall_sec"] >= 0 for p in res["partitions"])
+    # the package arrives at task time, yet every worker that imports it
+    # gets the zip re-read guard, which then covers crawl4ai_spark.zip too
+    assert res["zip_guard"] is True
