@@ -18,8 +18,8 @@ Three sections:
    write (no driver collect).
 2. crawl throughput — a 3-round BFS crawl over the synthetic pages
    corpus; metric = fetched+extracted URLs per second.
-3. scaling evidence (north rule) — the same crawl job at local[8] vs
-   local[$SPARK_GRAFT_CPUS] on identical input; efficiency =
+3. scaling evidence (north rule) — the same extract job at
+   local[CPUS // 4] vs local[CPUS] on identical input; efficiency =
    (throughput_hi / throughput_lo) / (cpus_hi / cpus_lo).
 4. submit_scaling — the same pair, but each point is a separate
    `spark-submit --master local[N] --py-files crawl4ai_spark.zip`
@@ -42,14 +42,13 @@ import time
 from crawl4ai_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-# Scaling pair for the N -> 4N evidence. Both points must stay below
-# the machine's saturation: in local mode each concurrent task occupies
-# ~2 cores (1 JVM task thread + 1 Python worker), so on this 32-core box
-# anything above local[16] is co-location-bound, not plan-bound. 2 -> 8
-# keeps both runs unsaturated; per-cpu throughput is flat there.
-LOW_CPUS = int(os.environ.get("SPARK_GRAFT_BENCH_LOW_CPUS", "2"))
-HIGH_CPUS = int(os.environ.get("SPARK_GRAFT_BENCH_HIGH_CPUS", str(4 * LOW_CPUS)))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+# Scaling pair for the N -> 4N evidence, derived from the machine:
+# local[CPUS // 4] -> local[CPUS]. In local mode each concurrent task
+# occupies ~2 cores (1 JVM task thread + 1 Python worker), so at the
+# high point tasks share cores.
+LOW_CPUS = int(os.environ.get("SPARK_GRAFT_BENCH_LOW_CPUS") or max(1, CPUS // 4))
+HIGH_CPUS = int(os.environ.get("SPARK_GRAFT_BENCH_HIGH_CPUS") or CPUS)
 
 HEADLINE = [
     "url_core", "url_filters", "url_scoring",
@@ -544,8 +543,8 @@ def main() -> None:
         scaling = {
             "job": "fetch+extract one-pass (scrape+markdown mapInPandas)",
             "note": (
-                "N->4N on one 32-core box; pair chosen below JVM+PythonWorker "
-                "co-location saturation (each task uses ~2 cores in local mode)"
+                "N->4N on one box: local[cpus//4] vs local[cpus]; each task "
+                "uses ~2 cores in local mode (JVM thread + Python worker)"
             ),
             "low": lo,
             "high": hi4,

@@ -12,9 +12,8 @@ state vocabulary) to html2text's published design; the implementation
 here is condensed to a different emit architecture in ~520 lines.
 
 Implementation: a single-pass stdlib ``html.parser.HTMLParser`` state
-machine (no external deps). Spark surface: an Arrow-batched pandas UDF
-(`markdown_batch`) — one Python call per Arrow batch, no per-row
-boundary crossing.
+machine (no external deps). The extract stage drives it from the DOM
+(``scrape.markdown_from_dom``); ``html_to_markdown`` feeds it a string.
 
 Scale note: conversion is a narrow per-row transformation — it
 pipelines inside whatever partitioning the fetch join produced, no
@@ -449,8 +448,9 @@ def _is_punct(ch: str) -> bool:
 
 
 def _finish(md: str) -> str:
-    """Shared final post-processing — the string path and scrape.py's
-    DOM-direct fast path MUST apply identical steps (byte parity)."""
+    """Shared final post-processing — ``html_to_markdown`` and
+    scrape.py's ``markdown_from_dom`` MUST apply identical steps (byte
+    parity)."""
     return md.replace("    ```", "```")
 
 
@@ -515,31 +515,3 @@ def links_to_citations(markdown: str, base_url: str = "") -> tuple[str, str]:
         for url, (num, desc) in sorted(numbered.items(), key=lambda kv: kv[1][0])
     )
     return "".join(out), "".join(refs)
-
-
-# ---------------------------------------------------------------------------
-# Spark surface: Arrow-batched conversion
-# ---------------------------------------------------------------------------
-
-
-def markdown_batch(html_series, url_series):
-    """pandas-level batch conversion: (html, base_url) -> struct fields.
-
-    Returns (raw_markdown, markdown_with_citations, references_markdown)
-    lists; used inside mapInPandas in the crawl plan.
-    """
-    raws, cits, refs = [], [], []
-    for html, url in zip(html_series, url_series):
-        if html is None:
-            raws.append(None)
-            cits.append(None)
-            refs.append(None)
-            continue
-        if isinstance(html, (bytes, bytearray)):
-            html = html.decode("utf-8", errors="replace")
-        raw = html_to_markdown(html, url or "")
-        cit, ref = links_to_citations(raw, url or "")
-        raws.append(raw)
-        cits.append(cit)
-        refs.append(ref)
-    return raws, cits, refs

@@ -868,52 +868,16 @@ def project_css_selector(root: _Node, css_selector: str) -> _Node:
     return new_root
 
 
-def _serialize(node: _Node, out: list[str], excluded: frozenset[str]) -> None:
-    # iterative (depth-proof): plain strings on the stack are pending
-    # close tags, emitted after the element's children pop off
-    stack: list = [node]
-    pop = stack.pop
-    while stack:
-        n = pop()
-        if isinstance(n, str):
-            out.append(n)
-            continue
-        if n.tag in STRIP_TAGS or n.tag in excluded:
-            continue
-        if n.tag == "":
-            out.append(n.attrs.get("text", ""))
-            continue
-        if n.tag != "#root":
-            attrs = "".join(
-                f' {k}="{v}"' for k, v in n.attrs.items() if v is not None
-            )
-            out.append(f"<{n.tag}{attrs}>")
-            if n.tag not in VOID_TAGS:
-                stack.append(f"</{n.tag}>")
-        if n.children:
-            stack.extend(reversed(n.children))
-
-
-def cleaned_html(root: _Node, excluded: frozenset[str] = DEFAULT_EXCLUDED_TAGS) -> str:
-    out: list[str] = []
-    _serialize(root, out, excluded)
-    return "".join(out).strip()
-
-
-def _md_events(node: _Node, out: list, excluded: frozenset[str]) -> bool:
-    """Collect the exact handler-event stream that reparsing
-    ``_serialize``'s output would produce, or return False when the
-    page is not provably round-trip-safe:
-
-    - text containing ``&`` or ``<`` re-tokenizes on reparse
-      (entityref / tag-open), so its event split differs;
-    - attribute values containing ``&`` (reparse unescapes them once
-      more), ``<``, or ``"`` (breaks the quoting) likewise.
-
-    Everything else maps 1:1: elements -> starttag [+ endtag unless
-    void], text -> data (adjacent text nodes merged, as one string
-    segment reparses to ONE data event). Iterative (depth-proof):
-    tuples on the stack are pre-built pending end-tag events."""
+def _dom_events(node: _Node, excluded: frozenset[str]) -> list:
+    """The cleaned DOM as events in document order, which
+    ``_event_html`` serializes into ``cleaned_html``:
+    ``("s", tag, attrs, safe)``, ``("e", tag)`` (none for void tags) and
+    ``("d", text)``, adjacent text merged into one run and the page's
+    ends stripped. ``safe``: no attribute value holds ``&`` (a reparse
+    unescapes it again), ``<`` or ``"`` (breaks the quoting), so
+    tokenizing the serialized tag yields the event unchanged.
+    Iterative (depth-proof): tuples on the stack are pending end tags."""
+    out: list = []
     stack: list = [node]
     pop = stack.pop
     while stack:
@@ -921,76 +885,94 @@ def _md_events(node: _Node, out: list, excluded: frozenset[str]) -> bool:
         if isinstance(n, tuple):  # pending ("e", tag)
             out.append(n)
             continue
-        if n.tag in STRIP_TAGS or n.tag in excluded:
+        tag = n.tag
+        if tag in STRIP_TAGS or tag in excluded:
             continue
-        if n.tag == "":
+        if tag == "":
             t = n.attrs.get("text", "")
             if not t:
                 continue
-            if "&" in t or "<" in t:
-                return False
             if out and out[-1][0] == "d":
                 out[-1] = ("d", out[-1][1] + t)
             else:
                 out.append(("d", t))
             continue
-        attrs = []
-        for k, v in n.attrs.items():
-            if v is None:
-                continue
-            if "&" in v or "<" in v or '"' in v:
-                return False
-            attrs.append((k, v))
-        if n.tag != "#root":
-            out.append(("s", n.tag, attrs))
-            if n.tag not in VOID_TAGS:
-                stack.append(("e", n.tag))
+        if tag != "#root":
+            attrs = []
+            safe = True
+            for k, v in n.attrs.items():
+                if v is None:
+                    continue
+                if "&" in v or "<" in v or '"' in v:
+                    safe = False
+                attrs.append((k, v))
+            out.append(("s", tag, attrs, safe))
+            if tag not in VOID_TAGS:
+                stack.append(("e", tag))
         if n.children:
             stack.extend(reversed(n.children))
-    return True
+    if out and out[0][0] == "d":
+        out[0] = ("d", out[0][1].lstrip())
+    if out and out[-1][0] == "d":
+        out[-1] = ("d", out[-1][1].rstrip())
+    return out
+
+
+def _event_html(ev: tuple) -> str:
+    """The one serialization of a ``_dom_events`` event: raw text,
+    ``<tag k="v">`` or ``</tag>``."""
+    kind = ev[0]
+    if kind == "d":
+        return ev[1]
+    if kind == "e":
+        return f"</{ev[1]}>"
+    return f"<{ev[1]}" + "".join(f' {k}="{v}"' for k, v in ev[2]) + ">"
+
+
+def cleaned_html(root: _Node, excluded: frozenset[str] = DEFAULT_EXCLUDED_TAGS) -> str:
+    return "".join(map(_event_html, _dom_events(root, excluded)))
 
 
 def markdown_from_dom(
     root: _Node,
     base_url: str = "",
     excluded: frozenset[str] = DEFAULT_EXCLUDED_TAGS,
-) -> str | None:
-    """raw_markdown straight off the cleaned DOM — the fast path of
-    ``html_to_markdown(cleaned_html(root), url)``, which serializes the
-    tree and RE-PARSES the string (two full HTMLParser passes per page;
-    ~1/3 of the extract stage's CPU). Dispatches the identical event
-    stream into the same ``_MdState`` emitter, so the output is
-    byte-identical by construction on round-trip-safe pages; returns
-    None (caller falls back to the string path) otherwise — pinned by
-    a corpus-wide equality test in tests/test_markdown_fastpath.py."""
-    events: list = []
-    if not _md_events(root, events, excluded):
-        return None
-    # mirror cleaned_html()'s .strip(): it can only affect text at the
-    # very start/end of the serialized string
-    if events and events[0][0] == "d":
-        t = events[0][1].lstrip()
-        if t:
-            events[0] = ("d", t)
-        else:
-            events.pop(0)
-    if events and events[-1][0] == "d":
-        t = events[-1][1].rstrip()
-        if t:
-            events[-1] = ("d", t)
-        else:
-            events.pop()
+) -> str:
+    """raw_markdown straight off the cleaned DOM, byte-identical to
+    ``html_to_markdown(cleaned_html(root), url)`` (the test oracle)
+    without serializing and reparsing the page's safe prefix.
+
+    Walks ``_dom_events`` into one ``_MdState``. Up to the first unsafe
+    event (a text run holding ``&`` or ``<``, or a start tag with ``"``
+    in a value) every event goes straight to its handlers, as the event
+    that tokenizing it yields: a tag that is not ``safe`` gets its values
+    unescaped, as the tokenizer reads a double-quoted value. So the
+    tokenizer of the whole string would reach the first unsafe event on
+    a token boundary with nothing held. From there the rest of the page
+    is serialized and run through the same calls ``html_to_markdown``
+    makes: one ``feed()``, ``feed("")`` and ``close()``."""
     from .markdown import _MdState, _finish
 
     p = _MdState(base_url=base_url)
+    events = _dom_events(root, excluded)
+    i = 0
     for ev in events:
         kind = ev[0]
-        if kind == "s":
-            p.handle_starttag(ev[1], ev[2])
+        if kind == "d":
+            if "&" in ev[1] or "<" in ev[1]:
+                break
+            p.handle_data(ev[1])
         elif kind == "e":
             p.handle_endtag(ev[1])
-        else:
-            p.handle_data(ev[1])
+        elif ev[3]:
+            p.handle_starttag(ev[1], ev[2])
+        elif any('"' in v for _, v in ev[2]):
+            break
+        else:  # the tokenizer reads each quoted value back unescaped
+            p.handle_starttag(ev[1], [(k, unescape(v)) for k, v in ev[2]])
+        i += 1
+    p.feed("".join(map(_event_html, events[i:])))
+    p.feed("")
     return _finish(p.result())
 
 
@@ -1173,10 +1155,10 @@ def scrape_one(
 ) -> dict:
     """Full scrape of one page -> plain-dict ScrapingResult.
 
-    ``want_root`` adds the parsed DOM under ``"_root"`` (consumed by
-    scrape_stage's DOM-direct markdown fast path); ``want_cleaned=False``
-    skips the serialization entirely — only valid when the caller drops
-    the cleaned_html column and regenerates it on demand.
+    ``want_root`` adds the parsed DOM under ``"_root"`` (scrape_stage
+    makes its markdown from it with ``markdown_from_dom``);
+    ``want_cleaned=False`` skips the serialization entirely, for callers
+    that drop the cleaned_html column.
 
     ``opts`` (any non-default ScrapeOptions) routes through the
     knob-driven extended flow, where ``excluded_tags`` uses the
@@ -1249,8 +1231,10 @@ def scrape_stage(df, html_col: str = "html", url_col: str = "url",
     Output adds: success, title, headings, meta, links, images,
     cleaned_html, text_extracted (+ raw_markdown,
     markdown_with_citations, references_markdown when ``markdown=True``).
+    raw_markdown is one ``markdown_from_dom`` call on the page's
+    scraped DOM; failed pages get nulls.
     """
-    from .markdown import html_to_markdown, links_to_citations
+    from .markdown import links_to_citations
 
     in_schema = df.schema
     scrape_ddl = SCRAPE_FIELDS_DDL.replace("text string", "text_extracted string")
@@ -1272,10 +1256,9 @@ def scrape_stage(df, html_col: str = "html", url_col: str = "url",
             "references_markdown string"
         )
 
-    # cleaned_html is serialized only if the caller keeps the column
-    # (or a page falls off the DOM-direct markdown fast path below) —
-    # at drop_cols=("html", "cleaned_html") the stage makes exactly ONE
-    # HTMLParser pass per page instead of two plus a serialization
+    # cleaned_html is serialized only if the caller keeps the column:
+    # markdown comes straight off the DOM, so at drop_cols=("html",
+    # "cleaned_html") the page is never serialized
     skip_clean = markdown and "cleaned_html" in drop_cols
 
     def process(batches):
@@ -1292,15 +1275,7 @@ def scrape_stage(df, html_col: str = "html", url_col: str = "url",
                 root = r.pop("_root", None)
                 if markdown:
                     if r["success"]:
-                        raw = (
-                            markdown_from_dom(root, url or "")
-                            if root is not None else None
-                        )
-                        if raw is None:  # not provably round-trip-safe
-                            ch = r["cleaned_html"]
-                            if ch is None:
-                                ch = cleaned_html(root)
-                            raw = html_to_markdown(ch, url or "")
+                        raw = markdown_from_dom(root, url or "")
                         cit, refs = links_to_citations(raw, url or "")
                     else:
                         raw = cit = refs = None
