@@ -3698,9 +3698,9 @@ def q_link_preview(spark, sf_dir):
     from .operators.link_preview import LinkPreviewConfig, link_preview_stage
 
     pages = _pages(spark, sf_dir)
-    results = scrape_stage(pages, "html", "url", markdown=False).select(
-        "url", "links"
-    )
+    results = scrape_stage(
+        pages, "html", "url", markdown=False, drop_cols=("html", "cleaned_html")
+    ).select("url", "links")
     heads = pages.select(
         "url", head_section(F.col("html").cast("string")).alias("head_html")
     )

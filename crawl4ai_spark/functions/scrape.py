@@ -1257,9 +1257,9 @@ def scrape_stage(df, html_col: str = "html", url_col: str = "url",
         )
 
     # cleaned_html is serialized only if the caller keeps the column:
-    # markdown comes straight off the DOM, so at drop_cols=("html",
-    # "cleaned_html") the page is never serialized
-    skip_clean = markdown and "cleaned_html" in drop_cols
+    # markdown comes straight off the DOM, so with "cleaned_html" in
+    # drop_cols the page is never serialized
+    skip_clean = "cleaned_html" in drop_cols
 
     def process(batches):
         import pandas as pd
@@ -1286,8 +1286,8 @@ def scrape_stage(df, html_col: str = "html", url_col: str = "url",
             res = pd.DataFrame(results)
             res = res.rename(columns={"text": "text_extracted"})
             carried = pdf.drop(columns=[c for c in drop_cols if c in pdf.columns])
-            if "cleaned_html" in drop_cols and "cleaned_html" in res.columns:
-                res = res.drop(columns=["cleaned_html"])
+            if skip_clean:
+                res = res.drop(columns=["cleaned_html"], errors="ignore")
             out = pd.concat(
                 [carried.reset_index(drop=True), res.reset_index(drop=True)],
                 axis=1,

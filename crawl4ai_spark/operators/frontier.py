@@ -84,7 +84,7 @@ class CrawlConfig:
     max_pages: int | None = None
     score_threshold: float | None = None
     round_seconds: float = 16.0  # politeness token basis per host per round
-    n_shards: int = 32  # url_seen shard count
+    n_shards: int = 32  # url_seen shard modulus (a column, not a file count)
     salt: int = 8  # hot-host spread factor
     include_external: bool = False
     # F10 link-exclusion flags (reference content_scraping_strategy.py
@@ -671,6 +671,7 @@ class CrawlRun:
 
     def seed(self, urls: list[str]) -> None:
         """Round-0 frontier from a seed list (canonical URLs)."""
+        self._sec(0, "seed")
         rows = [(u, f"{i:06d}") for i, u in enumerate(sorted(set(urls)))]
         df = self.spark.createDataFrame(rows, "url string, dfs_key string").select(
             "url",

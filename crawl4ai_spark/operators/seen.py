@@ -7,14 +7,15 @@ keyed by the canonical URL.
 
 Spark design for a 10^10-URL frontier:
 - key = ``xxhash64(canonical_url)`` (→ functions/urls.url_hash).
-- the seen set is a table sharded by ``pmod(url_hash, n_shards)`` and
-  stored as per-round parquet deltas, **directory-partitioned by
-  shard** (``url_seen/round=N/shard=K/``; an Iceberg bucketed table in
-  production). Directory partitioning means a shard predicate on the
-  seen side is pure file pruning — untouched shards are never read.
-- the per-round membership test is ONE co-partitioned left-anti join on
-  url_hash: candidate links are repartitioned by the same shard
-  function, so each task joins against exactly one shard.
+- the seen set is a table sharded by ``pmod(url_hash, n_shards)``,
+  stored as one parquet delta per round (``url_seen/round=N/``).
+  ``shard`` is a stored column and each file is sorted by
+  ``(shard, url_hash)``, so a shard predicate is a pushed-down filter
+  that skips row groups by their min/max statistics, as Iceberg prunes
+  by column stats. The file count follows the delta's input, not
+  ``n_shards``.
+- the exact membership test is ONE left-anti join on url_hash against
+  the whole seen set.
 - **probabilistic fast path** (``filter_kind="cuckoo"``): each round's
   delta also writes a per-shard cuckoo-filter sidecar
   (``url_seen_cuckoo/round=N``; codec in operators/cuckoo.py — the
@@ -23,7 +24,7 @@ Spark design for a 10^10-URL frontier:
   shard's filters in one Arrow-batched numpy kernel; candidates the
   filter rejects are *definitely* unseen (no false negatives) and skip
   the join entirely, and the exact join runs only for the "maybe" rows
-  against only the shards they map to (file-pruned). Exactness is
+  against only the shards they map to (row-group pruned). Exactness is
   preserved — the filter is a prefilter, never the verdict. In
   production the sidecars are executor-side broadcast variables; at
   10^10 URLs with ~24 bits/key they total ~30 GB across 32 shards, so
@@ -96,9 +97,7 @@ class SeenFilter:
 
     @staticmethod
     def _has_data(path: str) -> bool:
-        """True when at least one parquet data file exists under path —
-        an empty delta written with partitionBy emits no files, which
-        would break schema inference on the whole-tree read."""
+        """True when at least one parquet data file exists under path."""
         for root, _dirs, files in os.walk(path):
             if any(f.endswith(".parquet") for f in files):
                 return True
@@ -107,11 +106,11 @@ class SeenFilter:
     def load(self) -> DataFrame:
         if not self._has_data(self.path):
             return self.spark.createDataFrame([], SEEN_SCHEMA)
-        # per-round deltas live in round=N/shard=K subdirs (partition
-        # discovery -> shard predicates are file pruning)
-        return self.spark.read.parquet(self.path).select(
-            "url_hash", "url", F.col("shard").cast("int").alias("shard")
-        )
+        # explicit schema: no footer inference; `round` comes from the
+        # round=N directories, `shard` is a stored column
+        return self.spark.read.schema(SEEN_SCHEMA + ", round int").parquet(
+            self.path
+        ).select("url_hash", "url", "shard")
 
     def _load_sidecars(self) -> dict[int, list[tuple[int, int, np.ndarray]]] | None:
         """Per-shard sidecar list, or None when sidecars don't cover every
@@ -171,12 +170,11 @@ class SeenFilter:
     def anti_join(self, candidates: DataFrame, url_hash_col: str = "url_hash") -> DataFrame:
         """Rows of ``candidates`` whose url_hash is NOT in the seen set.
 
-        Exact path: one hash-partitioned left-anti join (the seen side is
-        pre-sharded on disk; bucketed Iceberg: zero seen-side shuffle).
+        Exact path: one left-anti join on url_hash against every delta.
 
         Cuckoo path (``filter_kind="cuckoo"``): definite-new rows skip
-        the join; maybe-seen rows join against only their shards
-        (file-pruned).
+        the join; maybe-seen rows join against only their shards (a
+        pushed-down ``shard`` filter on the sorted deltas).
         """
         if self.filter_kind is None:
             return self._exact_anti_join(candidates, url_hash_col)
@@ -223,7 +221,7 @@ class SeenFilter:
             return cand.drop("__maybe")
         if len(maybe_hashes) > 2_000_000:
             # driver-memory guard: giant maybe sets (filter barely
-            # filtering) degrade to the plain co-partitioned anti-join
+            # filtering) degrade to the exact anti-join
             return self._exact_anti_join(candidates, url_hash_col)
         touched = sorted({h % n_shards for h in maybe_hashes})
         probe = self.spark.createDataFrame(
@@ -247,9 +245,11 @@ class SeenFilter:
         """Write this round's delta of newly-seen URLs.
 
         One subdir per round, overwritten (not appended) so a crashed
-        round can be re-run idempotently; directory-partitioned by
-        shard. With ``filter_kind="cuckoo"``, a per-shard cuckoo sidecar
-        is built from the written delta (one extra small job per round).
+        round can be re-run idempotently; rows sorted by
+        ``(shard, url_hash)`` within each file, and as many files as the
+        input has partitions. With ``filter_kind="cuckoo"``, a per-shard
+        cuckoo sidecar is built from the written delta (one extra small
+        job per round).
 
         ``assume_unique=True`` skips the defensive dropDuplicates
         exchange — for callers whose rows are unique by url_hash by
@@ -263,15 +263,13 @@ class SeenFilter:
         )
         if not assume_unique:
             delta = delta.dropDuplicates(["url_hash"])
-        delta = delta.repartition(self.n_shards, "shard").sortWithinPartitions(
-            "url_hash"
-        )
         delta_path = os.path.join(self.path, f"round={round_no}")
-        delta.write.partitionBy("shard").mode("overwrite").parquet(delta_path)
+        delta.sortWithinPartitions("shard", "url_hash").write.mode(
+            "overwrite"
+        ).parquet(delta_path)
 
         if self.filter_kind is not None:
-            # explicit schema: an empty delta dir has no files to infer
-            # from (shard maps from the partition directories)
+            # explicit schema: an empty delta has nothing to infer from
             written = self.spark.read.schema(SEEN_SCHEMA).parquet(delta_path)
             written.groupBy("shard").applyInPandas(
                 _sidecar_row, schema=SIDECAR_SCHEMA

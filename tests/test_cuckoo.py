@@ -116,8 +116,15 @@ def test_unknown_filter_kind_rejected(spark, tmp_path):
 
 
 def test_cuckoo_shard_skip(spark, tmp_path):
-    """Candidates that all map to one shard must read only that shard's
-    files in the exact-confirm join (directory partition pruning)."""
+    """Candidates that all map to one shard must reach the exact-confirm
+    scan as a pushed-down ``shard`` predicate, and the delta files must
+    be sorted by shard with min/max statistics on it, so that predicate
+    skips row groups (the Iceberg way: column stats, not directories)."""
+    import glob
+    import re
+
+    import pyarrow.parquet as pq
+
     sf = SeenFilter(spark, str(tmp_path / "c"), n_shards=8,
                     filter_kind="cuckoo")
     sf.add(_mk_rows(spark, range(4000)), 0)
@@ -129,8 +136,20 @@ def test_cuckoo_shard_skip(spark, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     new = {r["url_hash"] for r in out.collect()}
     assert new == {i for i in cand_ids if i >= 4000}
-    # the seen-side scan carries the shard partition filter
-    assert "shard" in plan and ("PartitionFilters" in plan or "isin" in plan.lower())
+    # the seen-side scan pushes the shard predicate itself down
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert any("EqualTo(shard,3)" in p for p in pushed), plan
+
+    files = glob.glob(str(tmp_path / "c" / "url_seen" / "round=0" / "*.parquet"))
+    assert files
+    for f in files:
+        pf = pq.ParquetFile(f)
+        shards = pf.read(columns=["shard"]).column("shard").to_pylist()
+        assert shards == sorted(shards)
+        idx = pf.schema_arrow.get_field_index("shard")
+        for g in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(g).column(idx).statistics
+            assert st is not None and st.has_min_max
 
 
 def test_same_round_rewrite_invalidates_sidecar_cache(spark, tmp_path):

@@ -170,6 +170,51 @@ def test_crashed_round_rerun_is_idempotent(spark, corpus, tmp_path):
     assert seen_before == seen_after
 
 
+def test_seen_delta_layout(spark, corpus, tmp_path):
+    """Each round's seen delta is plain parquet under url_seen/round=N/
+    (no shard=K directories), every file sorted by (shard, url_hash)
+    with shard = pmod(url_hash, n_shards); load() returns exactly the
+    frontier rows stamped with each round. The seed's jobs carry their
+    own job group."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    pages, langs = corpus
+    seeds = [page_url(0, langs[0]), page_url(7, langs[7])]
+    cfg = CrawlConfig(max_depth=2, round_seconds=8.0)
+    wd = str(tmp_path / "layout")
+    run = CrawlRun(spark, pages, wd, cfg)
+    run.seed(seeds)
+    tracker = spark.sparkContext.statusTracker()
+    assert tracker.getJobIdsForGroup(run.job_group(0, "seed"))
+    for r in range(2):
+        run.run_round(r)
+
+    seen_dir = os.path.join(wd, "url_seen")
+    assert sorted(os.listdir(seen_dir)) == ["round=0", "round=1", "round=2"]
+    for d in os.listdir(seen_dir):
+        assert not [n for n in os.listdir(os.path.join(seen_dir, d))
+                    if n.startswith("shard=")]
+        files = glob.glob(os.path.join(seen_dir, d, "*.parquet"))
+        assert files
+        for f in files:
+            t = pq.read_table(f, columns=["shard", "url_hash"])
+            keys = list(zip(t["shard"].to_pylist(), t["url_hash"].to_pylist()))
+            assert keys == sorted(keys)
+            assert all(s == h % cfg.n_shards for s, h in keys)
+
+    stamped = set()
+    for r in range(3):
+        fr = spark.read.parquet(run._frontier_path(r)).filter(F.col("round") == r)
+        stamped |= {(x["url"], x["url_hash"], x["url_hash"] % cfg.n_shards)
+                    for x in fr.collect()}
+    got = [tuple(x) for x in
+           run.seen.load().select("url", "url_hash", "shard").collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == stamped
+
+
 def test_robots_blocking(spark, corpus, tmp_path):
     pages, langs = corpus
     hosts = [f"h{i}" for i in range(32)]

@@ -247,7 +247,7 @@ def test_crawl_round_job_budget(spark, tmp_path):
     """The per-round Spark-job count is the crawl's fixed cost (the AQE
     floor dominated sf0.1 wall time in r3). Pin the structural budget:
     every run_round section is job-group-tagged, and a steady-state
-    round must stay within 20 jobs — r4 cuts were metrics (Spark agg ->
+    round must stay within 14 jobs — r4 cuts were metrics (Spark agg ->
     guarded driver pyarrow), seen (anti-join -> round-stamp filter +
     assume_unique), politeness (full_outer join -> one-exchange union
     fold), and the join-mode salted exchange (partition_id as a pure
@@ -276,10 +276,11 @@ def test_crawl_round_job_budget(spark, tmp_path):
             for s in sections
         }
         total = sum(per_sec.values())
-        # measured 14 with the r4 cuts (results 6 after the
-        # non-binding-budget fast path, frontier 4, seen 2,
-        # politeness 2); 16 leaves AQE-variance headroom
-        assert total <= 16, f"crawl round job budget blown: {per_sec}"
+        # measured 12 (results 5 after the non-binding-budget fast
+        # path, frontier 4, seen 1 since the delta is one unpartitioned
+        # write, politeness 2); 14 leaves AQE-variance headroom
+        assert total <= 14, f"crawl round job budget blown: {per_sec}"
+        assert per_sec["seen"] <= 1, per_sec
         # the driver-side metrics path must have engaged at this scale
         assert per_sec["metrics"] == 0, per_sec
     finally:

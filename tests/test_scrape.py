@@ -108,6 +108,23 @@ def test_scrape_stage_spark(spark, sf_dir):
         assert len(r["links"]) >= 4
 
 
+def test_scrape_stage_drops_cleaned_html_without_markdown(spark, sf_dir):
+    """With markdown=False, "cleaned_html" in drop_cols removes the
+    column and leaves every other column as the run that keeps it."""
+    pages = generate_pages(spark, sf_dir).limit(20)
+    kept = scrape_stage(pages, "html", "url", markdown=False)
+    dropped = scrape_stage(pages, "html", "url", markdown=False,
+                           drop_cols=("cleaned_html",))
+    assert "cleaned_html" in kept.columns
+    assert "cleaned_html" not in dropped.columns
+    assert dropped.columns == [c for c in kept.columns if c != "cleaned_html"]
+
+    def by_url(df):
+        return {r["url"]: r.asDict(recursive=True) for r in df.collect()}
+
+    assert by_url(dropped) == by_url(kept.drop("cleaned_html"))
+
+
 def test_scrape_stage_single_python_eval(spark, sf_dir):
     """The scrape UDF must appear exactly once in the physical plan
     (a duplicated ArrowEvalPython doubles the Python work)."""

@@ -573,8 +573,8 @@ def test_crawl_round_snapshots(spark, sf_dir, tmp_path):
         {"round": 0, "stage": "seed"}, {"round": 0}]
     ts = run.table("url_seen")
     assert ts.snapshots()[0]["summary"] == {"round": 0, "stage": "seed"}
-    # seen table current == engine's full seen set, with shard values
-    # reconstructed from the hive paths
+    # seen table current == engine's full seen set, with shard read
+    # from the stored column
     seen_rows = ts.read()
     assert {"url_hash", "url", "shard"} <= set(seen_rows.columns)
     eng = spark.read.parquet(os.path.join(wd, "url_seen"))
