@@ -4227,7 +4227,7 @@ def q_tables_extract(spark, sf_dir):
             html_col="mhtml",
             markdown=False,
             opts=ScrapeOptions(media=True),
-            drop_cols=("mhtml",),
+            drop_cols=("mhtml", "cleaned_html"),
         )
     )
     imgs = scraped.select(

@@ -30,7 +30,14 @@ from __future__ import annotations
 import math
 import re
 
-from .scrape import VOID_TAGS, _Node, parse_dom
+from .scrape import (
+    _Node,
+    _text_content,
+    _text_strip,
+    _walk,
+    outer_html,
+    parse_dom,
+)
 
 EXCLUDED_TAGS = {
     "nav", "footer", "header", "aside", "script", "style", "form",
@@ -109,58 +116,8 @@ def clean_tokens(tokens: list[str]) -> list[str]:
     ]
 
 
-# ---------------------------------------------------------------------------
-# DOM helpers (over functions.scrape's stdlib DOM)
-# ---------------------------------------------------------------------------
-
-
-def _text_strip(node: _Node) -> str:
-    """bs4 get_text(strip=True): stripped strings joined with ''.
-    Iterative — DOM depth is attacker-controlled."""
-    parts: list[str] = []
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if n.tag == "":
-            s = n.attrs.get("text", "").strip()
-            if s:
-                parts.append(s)
-            continue
-        if n.children:
-            stack.extend(reversed(n.children))
-    return "".join(parts)
-
-
-def _serialize(node: _Node) -> str:
-    # iterative (depth-proof): plain strings on the stack are pending
-    # close tags — attacker-controlled nesting must not RecursionError
-    out: list[str] = []
-    stack: list = [node]
-    while stack:
-        n = stack.pop()
-        if isinstance(n, str):
-            out.append(n)
-            continue
-        if n.tag == "":
-            out.append(n.attrs.get("text", ""))
-            continue
-        attrs = "".join(
-            f' {k}="{v}"' for k, v in n.attrs.items() if v is not None
-        )
-        out.append(f"<{n.tag}{attrs}>")
-        if n.tag not in VOID_TAGS:
-            stack.append(f"</{n.tag}>")
-        if n.children:
-            stack.extend(reversed(n.children))
-    return "".join(out)
-
-
-def _inner_html(node: _Node) -> str:
-    return "".join(_serialize(c) for c in node.children)
-
-
 def _find_body(root: _Node) -> _Node:
-    for n in _walk_elements(root):
+    for n in _walk(root):
         if n.tag == "body":
             return n
     body = _Node("body")
@@ -168,22 +125,11 @@ def _find_body(root: _Node) -> _Node:
     return body
 
 
-def _walk_elements(node: _Node):
-    # iterative preorder (depth-proof)
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if n.tag not in ("", "#root"):
-            yield n
-        if n.children:
-            stack.extend(reversed(n.children))
-
-
 def _remove_tags(node: _Node, tags: set[str]) -> None:
-    node.children = [c for c in node.children if c.tag not in tags]
-    for c in node.children:
-        if c.tag != "":
-            _remove_tags(c, tags)
+    # filtering the held node's children steers the walk (see _walk)
+    for n in _walk(node):
+        if n.children:
+            n.children = [c for c in n.children if c.tag not in tags]
 
 
 # ---------------------------------------------------------------------------
@@ -234,32 +180,38 @@ def _direct_link_text_len(node: _Node) -> int:
 
 def _prune(parent: _Node, node: _Node, threshold: float,
            threshold_type: str, min_word_threshold: int | None) -> None:
-    text = _text_strip(node)
-    text_len = len(text)
-    tag_len = len(_inner_html(node))
-    link_text_len = _direct_link_text_len(node)
-    score = _composite_score(
-        node, text_len, tag_len, link_text_len, min_word_threshold, text
-    )
-    if threshold_type == "fixed":
-        should_remove = score < threshold
-    else:
-        tag_importance = TAG_IMPORTANCE.get(node.tag, 0.7)
-        text_ratio = text_len / tag_len if tag_len > 0 else 0
-        link_ratio = link_text_len / text_len if text_len > 0 else 1
-        th = threshold
-        if tag_importance > 1:
-            th *= 0.8
-        if text_ratio > 0.4:
-            th *= 0.9
-        if link_ratio > 0.6:
-            th *= 1.2
-        should_remove = score < th
-    if should_remove:
-        parent.children.remove(node)
-    else:
-        for child in [c for c in node.children if c.tag != ""]:
-            _prune(node, child, threshold, threshold_type, min_word_threshold)
+    """Top-down: score each element on its whole subtree, then remove it
+    from its parent or descend into its element children."""
+    stack = [(parent, node)]
+    while stack:
+        parent, node = stack.pop()
+        text = _text_strip(node)
+        text_len = len(text)
+        tag_len = sum(len(outer_html(c)) for c in node.children)
+        link_text_len = _direct_link_text_len(node)
+        score = _composite_score(
+            node, text_len, tag_len, link_text_len, min_word_threshold, text
+        )
+        if threshold_type == "fixed":
+            should_remove = score < threshold
+        else:
+            tag_importance = TAG_IMPORTANCE.get(node.tag, 0.7)
+            text_ratio = text_len / tag_len if tag_len > 0 else 0
+            link_ratio = link_text_len / text_len if text_len > 0 else 1
+            th = threshold
+            if tag_importance > 1:
+                th *= 0.8
+            if text_ratio > 0.4:
+                th *= 0.9
+            if link_ratio > 0.6:
+                th *= 1.2
+            should_remove = score < th
+        if should_remove:
+            parent.children.remove(node)
+        else:
+            stack.extend(
+                (node, c) for c in reversed(node.children) if c.tag != ""
+            )
 
 
 def prune_filter_blocks(
@@ -289,7 +241,7 @@ def prune_filter_blocks(
         if el.tag == "":
             continue
         if len(_text_strip(el)) > 0:
-            blocks.append(_serialize(el))
+            blocks.append(outer_html(el))
     return blocks
 
 
@@ -345,39 +297,26 @@ class _BM25Okapi:
         return scores
 
 
-def _get_text(node: _Node) -> str:
-    parts: list[str] = []
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if n.tag == "":
-            parts.append(n.attrs.get("text", ""))
-            continue
-        if n.children:
-            stack.extend(reversed(n.children))
-    return "".join(parts)
-
-
 def extract_page_query(root: _Node, body: _Node,
                        user_query: str | None = None) -> str:
     """RelevantContentFilter.extract_page_query (:125-161)."""
     if user_query:
         return user_query
     parts: list[str] = []
-    title = next((n for n in _walk_elements(root) if n.tag == "title"), None)
+    title = next((n for n in _walk(root) if n.tag == "title"), None)
     if title is not None:
-        t = _get_text(title)
+        t = _text_content(title)
         if t:
             parts.append(t)
-    h1 = next((n for n in _walk_elements(root) if n.tag == "h1"), None)
+    h1 = next((n for n in _walk(root) if n.tag == "h1"), None)
     if h1 is not None:
-        parts.append(_get_text(h1))
+        parts.append(_text_content(h1))
     temp = ""
     for meta_name in ("keywords", "description"):
         meta = next(
             (
                 n
-                for n in _walk_elements(root)
+                for n in _walk(root)
                 if n.tag == "meta" and n.attrs.get("name") == meta_name
             ),
             None,
@@ -386,8 +325,8 @@ def extract_page_query(root: _Node, body: _Node,
             parts.append(meta.attrs["content"])
             temp += meta.attrs["content"]
     if not temp:
-        for p in (n for n in _walk_elements(body) if n.tag == "p"):
-            t = _get_text(p)
+        for p in (n for n in _walk(body) if n.tag == "p"):
+            t = _text_content(p)
             if len(t) > 150:
                 parts.append(t[:150])
                 break
@@ -439,25 +378,27 @@ _CLEAN_UNWANTED_ATTRS = {"style", "onclick", "onmouseover", "align", "bgcolor",
 
 def clean_element(node: _Node) -> str:
     """clean_element (:329-377): re-serialize minus unwanted tags/attrs,
-    text nodes stripped."""
+    text nodes stripped, every element closed (void ones too).
+    Iterative: strings on the stack are pending end tags."""
     out: list[str] = []
-
-    def render(n: _Node) -> None:
+    stack: list = [node]
+    while stack:
+        n = stack.pop()
+        if isinstance(n, str):
+            out.append(n)
+            continue
         if n.tag == "":
             out.append(n.attrs.get("text", "").strip())
-            return
+            continue
         if n.tag in _CLEAN_UNWANTED_TAGS:
-            return
+            continue
         out.append(f"<{n.tag}")
         for k, v in n.attrs.items():
             if k not in _CLEAN_UNWANTED_ATTRS and v is not None:
                 out.append(f' {k}="{v}"')
         out.append(">")
-        for c in n.children:
-            render(c)
-        out.append(f"</{n.tag}>")
-
-    render(node)
+        stack.append(f"</{n.tag}>")
+        stack.extend(reversed(n.children))
     return "".join(out)
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import re
 
-from .scrape import STRIP_TAGS, VOID_TAGS, _Node, parse_dom
+from .scrape import _text_content, _walk, outer_html, parse_dom
 
 _DIMENSION_RX = re.compile(r"(\d+)(\D*)")
 _CTRL_RX = re.compile(r"[\x00-\x1f\x7f-\x9f]")
@@ -91,76 +91,36 @@ def preprocess_html_for_schema(
         return ""
     try:
         root = parse_dom(html_content)
+        # replacing the held node's children steers the walk (see _walk)
+        for n in _walk(root):
+            if n.tag == "":
+                txt = n.attrs.get("text", "")
+                if len(txt.strip()) > text_threshold:
+                    n.attrs["text"] = txt.strip()[:text_threshold] + "..."
+                continue
+            for k in list(n.attrs.keys()):
+                if not (k in FIT_KEEP_ATTRS or k.startswith("data-")):
+                    n.attrs.pop(k)
+                elif n.attrs[k] is not None and len(n.attrs[k]) > attr_value_threshold:
+                    n.attrs[k] = n.attrs[k][:attr_value_threshold] + "..."
+            n.children = [c for c in n.children if c.tag not in FIT_REMOVE_TAGS]
 
-        def clean(node: _Node) -> None:
-            node.children = [
-                c for c in node.children if c.tag not in FIT_REMOVE_TAGS
-            ]
-            for c in node.children:
-                if c.tag == "":
-                    txt = c.attrs.get("text", "")
-                    if len(txt.strip()) > text_threshold:
-                        c.attrs["text"] = txt.strip()[:text_threshold] + "..."
-                    continue
-                for k in list(c.attrs.keys()):
-                    if not (k in FIT_KEEP_ATTRS or k.startswith("data-")):
-                        c.attrs.pop(k)
-                    elif c.attrs[k] is not None and len(c.attrs[k]) > attr_value_threshold:
-                        c.attrs[k] = c.attrs[k][:attr_value_threshold] + "..."
-                clean(c)
-
-        clean(root)
-
-        # drop repeated (tag, class, text-hash) elements, first-seen wins
+        # drop repeated (tag, class, text-hash) elements, first-seen
+        # wins; a node's children are all checked before any of them
+        # is descended into
         seen: set[tuple] = set()
-
-        def text_of(n: _Node) -> str:
-            out = []
-
-            def walk(x: _Node):
-                if x.tag == "":
-                    out.append(x.attrs.get("text", ""))
-                    return
-                for c in x.children:
-                    walk(c)
-
-            walk(n)
-            return "".join(out)
-
-        def dedup(node: _Node) -> None:
+        for n in _walk(root):
             kept = []
-            for c in node.children:
+            for c in n.children:
                 if c.tag != "" and c.attrs.get("class"):
-                    sig = (c.tag, c.attrs["class"], hash(text_of(c)))
+                    sig = (c.tag, c.attrs["class"], hash(_text_content(c)))
                     if sig in seen:
                         continue
                     seen.add(sig)
                 kept.append(c)
-            node.children = kept
-            for c in node.children:
-                if c.tag != "":
-                    dedup(c)
+            n.children = kept
 
-        dedup(root)
-
-        out: list[str] = []
-
-        def serialize(n: _Node) -> None:
-            if n.tag == "":
-                out.append(n.attrs.get("text", ""))
-                return
-            if n.tag != "#root":
-                attrs = "".join(
-                    f' {k}="{v}"' for k, v in n.attrs.items() if v is not None
-                )
-                out.append(f"<{n.tag}{attrs}>")
-            for c in n.children:
-                serialize(c)
-            if n.tag != "#root" and n.tag not in VOID_TAGS:
-                out.append(f"</{n.tag}>")
-
-        serialize(root)
-        result = "".join(out)
+        result = outer_html(root)
         if len(result) > max_size:
             return result[:max_size] + "..."
         return result

@@ -33,7 +33,15 @@ from __future__ import annotations
 import json
 import re
 
-from .scrape import _Node, parse_dom
+from .scrape import (
+    _Node,
+    _parent_map,
+    _text_content,
+    _text_strip,
+    _walk,
+    outer_html,
+    parse_dom,
+)
 
 _SIMPLE_RX = re.compile(
     r"^(?P<tag>\*|[a-zA-Z][\w-]*)?"
@@ -258,21 +266,6 @@ def compile_selector(selector: str) -> list[list[tuple[str, SimpleSelector]]]:
     return groups
 
 
-def _descendants(node: _Node):
-    # iterative preorder (document order): recursive `yield from` hits
-    # the interpreter recursion limit on adversarially deep pages
-    stack = [iter(node.children)]
-    while stack:
-        c = next(stack[-1], None)
-        if c is None:
-            stack.pop()
-            continue
-        if c.tag != "":
-            yield c
-            if c.children:
-                stack.append(iter(c.children))
-
-
 def select_all(root: _Node, selector: str) -> list[_Node]:
     """All descendant nodes of `root` matching the selector, in
     document order, de-duplicated across groups."""
@@ -310,22 +303,15 @@ def select_all(root: _Node, selector: str) -> list[_Node]:
             anc = _parents.get(id(anc))
         return False
 
-    _parents: dict[int, _Node | None] = {}
+    # the REAL parent (incl. #root): position pseudos and sibling
+    # combinators need the container's child list even for fragment
+    # top-level elements; #root itself can never match a selector, so
+    # ancestor/child matching is unaffected
+    _parents = _parent_map(root)
 
-    # record the REAL parent (incl. #root): position pseudos and
-    # sibling combinators need the container's child list even for
-    # fragment top-level elements; #root itself can never match a
-    # selector, so ancestor/child matching is unaffected. Iterative:
-    # DOM depth is attacker-controlled (see _descendants).
-    stack: list = [(root, None)]
-    while stack:
-        n, parent = stack.pop()
-        _parents[id(n)] = parent
-        for c in n.children:
-            if c.tag != "":
-                stack.append((c, n))
-
-    for node in _descendants(root):
+    for node in _walk(root):
+        if node is root or node.tag == "":
+            continue
         for seq in groups:
             if match_seq(node, seq):
                 if id(node) not in seen:
@@ -543,20 +529,6 @@ def _xp_name_match(node: _Node, name: str) -> bool:
     return node.tag not in ("", "#root") and (name == "*" or node.tag == name)
 
 
-def _xp_text_nodes(node: _Node, deep: bool):
-    # iterative document-order walk (depth-proof, see _descendants)
-    stack = [iter(node.children)]
-    while stack:
-        c = next(stack[-1], None)
-        if c is None:
-            stack.pop()
-            continue
-        if c.tag == "":
-            yield c.attrs.get("text", "")
-        elif deep and c.children:
-            stack.append(iter(c.children))
-
-
 _XP_CMP = {
     "=": lambda a, b: a == b,
     "!=": lambda a, b: a != b,
@@ -632,7 +604,7 @@ def _xp_eval_pred(p: tuple, node: _Node, idx: int, size: int) -> bool:
         return _xpath_text(node).startswith(p[1])
     if kind == "textnode_cmp":
         # node-set comparison: true if ANY direct text node satisfies it
-        texts = [t for t in _xp_text_nodes(node, deep=False)]
+        texts = [c.attrs.get("text", "") for c in node.children if c.tag == ""]
         if p[1] == "=":
             return any(t == p[2] for t in texts)
         return any(t != p[2] for t in texts)
@@ -658,18 +630,6 @@ def _xp_apply_preds(group: list[_Node], preds: list) -> list[_Node]:
     return out
 
 
-def _xp_parent_map(root: _Node) -> dict[int, _Node]:
-    pm: dict[int, _Node] = {}
-    stack = [root]
-    while stack:
-        n = stack.pop()
-        for c in n.children:
-            pm[id(c)] = n
-            if c.children:
-                stack.append(c)
-    return pm
-
-
 def _xp_axis_group(
     node: _Node, axis: str, name: str, pmap: dict[int, _Node]
 ) -> list[_Node]:
@@ -687,11 +647,11 @@ def _xp_axis_group(
     if axis == "child":
         return [c for c in node.children if _xp_name_match(c, name)]
     if axis == "descendant":
-        return [d for d in _descendants(node) if _xp_name_match(d, name)]
+        return [
+            d for d in _walk(node) if d is not node and _xp_name_match(d, name)
+        ]
     if axis == "descendant-or-self":
-        out = [node] if _xp_name_match(node, name) else []
-        out.extend(d for d in _descendants(node) if _xp_name_match(d, name))
-        return out
+        return [d for d in _walk(node) if _xp_name_match(d, name)]
     if axis in ("ancestor", "ancestor-or-self"):
         # reverse axes: nearest-first (self first for -or-self)
         out = []
@@ -760,7 +720,7 @@ def xpath_select(root: _Node, expr: str):
     steps = _xp_parse(expr)
     pmap: dict[int, _Node] | None = None
     if any(s[2] is not None for s in steps):
-        pmap = _xp_parent_map(root)
+        pmap = _parent_map(root)
     ctx: list[_Node] = [root]
     for i, (sep, name, named_axis, preds) in enumerate(steps):
         last = i == len(steps) - 1
@@ -769,7 +729,8 @@ def xpath_select(root: _Node, expr: str):
                 raise ValueError(f"text() must be the final step: {expr!r}")
             out_s: list[str] = []
             for node in ctx:
-                out_s.extend(_xp_text_nodes(node, deep=sep == "//"))
+                pool = _walk(node) if sep == "//" else node.children
+                out_s.extend(n.attrs.get("text", "") for n in pool if n.tag == "")
             return out_s
         if name.startswith("@"):
             if not last or preds or named_axis:
@@ -780,7 +741,8 @@ def xpath_select(root: _Node, expr: str):
                 # '/@attr' reads the context element's own attribute;
                 # '//@attr' is descendant-or-self (includes the context)
                 pool = (
-                    [node, *_descendants(node)] if sep == "//" else [node]
+                    [n for n in _walk(node) if n.tag != ""]
+                    if sep == "//" else [node]
                 )
                 for n in pool:
                     if attr in n.attrs and n.attrs[attr] is not None:
@@ -791,7 +753,10 @@ def xpath_select(root: _Node, expr: str):
         for node in ctx:
             if named_axis is not None:
                 # '//axis::x' expands to descendant-or-self::node()/axis::x
-                pool = [node, *_descendants(node)] if sep == "//" else [node]
+                pool = (
+                    [n for n in _walk(node) if n.tag != ""]
+                    if sep == "//" else [node]
+                )
                 groups = [
                     _xp_axis_group(n, named_axis, name, pmap) for n in pool
                 ]
@@ -802,7 +767,7 @@ def xpath_select(root: _Node, expr: str):
                 # each parent's sibling group, so group by parent
                 by_parent: dict[int, list[_Node]] = {}
                 order: list[int] = []
-                # iterative preorder (depth-proof, see _descendants)
+                # iterative preorder (depth-proof, see scrape._walk)
                 wstack: list = [(node, iter(node.children))]
                 while wstack:
                     parent, it = wstack[-1]
@@ -834,7 +799,7 @@ def xpath_select(root: _Node, expr: str):
 def _xpath_text(node: _Node) -> str:
     """Reference XPath text semantics: ''.join(.//text()).strip()
     (extraction_strategy.py:1668-1669) — raw text nodes, outer strip."""
-    return "".join(_xp_text_nodes(node, deep=True)).strip()
+    return _text_content(node).strip()
 
 
 def xpath_select_elements(root: _Node, selector: str) -> list[_Node]:
@@ -854,27 +819,6 @@ def xpath_select_elements(root: _Node, selector: str) -> list[_Node]:
 # ---------------------------------------------------------------------------
 # schema-driven extraction
 # ---------------------------------------------------------------------------
-
-
-def _text_strip(node: _Node) -> str:
-    parts: list[str] = []
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        if n.tag == "":
-            s = n.attrs.get("text", "").strip()
-            if s:
-                parts.append(s)
-            continue
-        if n.children:
-            stack.extend(reversed(n.children))
-    return "".join(parts)
-
-
-def _outer_html(node: _Node) -> str:
-    from .content_filter import _serialize
-
-    return _serialize(node)
 
 
 def _apply_transform(value, transform: str):
@@ -917,7 +861,7 @@ def _extract_single(element: _Node, field: dict, engine: str = "css"):
     elif ftype == "attribute":
         value = selected.attrs.get(field["attribute"])
     elif ftype == "html":
-        value = _outer_html(selected)
+        value = outer_html(selected)
     elif ftype == "regex":
         m = re.search(field["pattern"], text_fn(selected))
         value = m.group(1) if m else None

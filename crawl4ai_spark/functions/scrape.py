@@ -272,10 +272,17 @@ def parse_dom(html: str) -> _Node:
 
 
 def _walk(node: _Node):
-    # iterative preorder: recursive `yield from` makes every yielded
-    # node climb the whole generator chain (O(depth) per node); an
-    # explicit stack yields each node once. Same order as the
-    # recursive form: node first, then children left-to-right.
+    """Every node under ``node`` (itself first, text nodes included) in
+    document preorder, the recursive order, iteratively: page depth is
+    attacker-controlled.
+
+    A node's children are read only when the consumer resumes the walk
+    after receiving it, so a consumer may replace ``n.children`` while
+    it holds ``n`` and the walk descends into the new list (the
+    tag-removal and fit_html passes filter this way)."""
+    # recursive `yield from` makes every yielded node climb the whole
+    # generator chain (O(depth) per node); an explicit stack yields
+    # each node once
     stack = [node]
     pop = stack.pop
     while stack:
@@ -450,6 +457,18 @@ def _text_content(node: _Node) -> str:
     for n in _walk(node):
         if n.tag == "":
             out.append(n.attrs.get("text", ""))
+    return "".join(out)
+
+
+def _text_strip(node: _Node) -> str:
+    """bs4 ``get_text(strip=True)``: every descendant text run stripped,
+    the non-empty ones joined with ''."""
+    out: list[str] = []
+    for n in _walk(node):
+        if n.tag == "":
+            t = n.attrs.get("text", "").strip()
+            if t:
+                out.append(t)
     return "".join(out)
 
 
@@ -931,6 +950,34 @@ def _event_html(ev: tuple) -> str:
 
 def cleaned_html(root: _Node, excluded: frozenset[str] = DEFAULT_EXCLUDED_TAGS) -> str:
     return "".join(map(_event_html, _dom_events(root, excluded)))
+
+
+def outer_html(node: _Node) -> str:
+    """The subtree as markup: raw text, each tag through ``_event_html``
+    (``None``-valued attributes dropped), no end tag for ``VOID_TAGS``,
+    ``#root`` transparent. Unlike ``cleaned_html`` it keeps script/style
+    and the text at the ends as they are. Iterative (depth-proof):
+    tuples on the stack are pending end tags."""
+    out: list[str] = []
+    stack: list = [node]
+    pop = stack.pop
+    while stack:
+        n = pop()
+        if isinstance(n, tuple):  # pending ("e", tag)
+            out.append(_event_html(n))
+            continue
+        tag = n.tag
+        if tag == "":
+            out.append(n.attrs.get("text", ""))
+            continue
+        if tag != "#root":
+            attrs = [(k, v) for k, v in n.attrs.items() if v is not None]
+            out.append(_event_html(("s", tag, attrs)))
+            if tag not in VOID_TAGS:
+                stack.append(("e", tag))
+        if n.children:
+            stack.extend(reversed(n.children))
+    return "".join(out)
 
 
 def markdown_from_dom(

@@ -15,14 +15,7 @@ caption:string, summary:string, score:double>>``.
 
 from __future__ import annotations
 
-from .scrape import _Node, parse_dom
-
-
-def _walk(node: _Node):
-    yield node
-    for c in node.children:
-        if c.tag != "":
-            yield from _walk(c)
+from .scrape import _Node, _text_content, _walk, parse_dom
 
 
 def _find_all(node: _Node, tag: str, *, skip_self: bool = True) -> list[_Node]:
@@ -31,20 +24,6 @@ def _find_all(node: _Node, tag: str, *, skip_self: bool = True) -> list[_Node]:
         if n.tag == tag and not (skip_self and n is node):
             out.append(n)
     return out
-
-
-def _get_text(node: _Node) -> str:
-    parts: list[str] = []
-
-    def walk(n: _Node):
-        if n.tag == "":
-            parts.append(n.attrs.get("text", ""))
-            return
-        for c in n.children:
-            walk(c)
-
-    walk(node)
-    return "".join(parts)
 
 
 def _cells(row: _Node) -> list[_Node]:
@@ -83,9 +62,9 @@ def table_score(table: _Node) -> float:
     if table.attrs.get("summary"):
         score += 1
     total_text = sum(
-        len(_get_text(c).strip()) for r in rows for c in _cells(r)
+        len(_text_content(c).strip()) for r in rows for c in _cells(r)
     )
-    total_tags = sum(1 for _ in _walk(table)) - 1
+    total_tags = sum(1 for n in _walk(table) if n.tag != "") - 1
     text_ratio = total_text / (total_tags + 1e-5)
     if text_ratio > 20:
         score += 3
@@ -100,7 +79,7 @@ def table_score(table: _Node) -> float:
 def extract_table(table: _Node) -> dict:
     """extract_table_data (reference :275-346)."""
     captions = _find_all(table, "caption")
-    caption = _get_text(captions[0]).strip() if captions else ""
+    caption = _text_content(captions[0]).strip() if captions else ""
     summary = (table.attrs.get("summary") or "").strip()
 
     def colspan(cell: _Node) -> int:
@@ -116,7 +95,7 @@ def extract_table(table: _Node) -> dict:
         thead_rows = _find_all(theads[0], "tr")
         if thead_rows:
             for cell in [c for c in _cells(thead_rows[0]) if c.tag == "th"]:
-                headers.extend([_get_text(cell).strip()] * colspan(cell))
+                headers.extend([_text_content(cell).strip()] * colspan(cell))
         thead_ids = {id(r) for r in thead_rows}
         body_rows = [r for r in all_rows if id(r) not in thead_ids]
     else:
@@ -124,11 +103,11 @@ def extract_table(table: _Node) -> dict:
             first_cells = _cells(all_rows[0])
             if any(c.tag == "th" for c in first_cells):
                 for cell in first_cells:
-                    headers.extend([_get_text(cell).strip()] * colspan(cell))
+                    headers.extend([_text_content(cell).strip()] * colspan(cell))
                 body_rows = all_rows[1:]
             else:
                 for cell in first_cells:
-                    headers.extend([_get_text(cell).strip()] * colspan(cell))
+                    headers.extend([_text_content(cell).strip()] * colspan(cell))
                 body_rows = all_rows
         else:
             body_rows = []
@@ -137,7 +116,7 @@ def extract_table(table: _Node) -> dict:
     for r in body_rows:
         row_data: list[str] = []
         for cell in [c for c in _cells(r) if c.tag == "td"]:
-            row_data.extend([_get_text(cell).strip()] * colspan(cell))
+            row_data.extend([_text_content(cell).strip()] * colspan(cell))
         if row_data:
             rows.append(row_data)
 

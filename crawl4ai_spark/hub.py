@@ -53,8 +53,8 @@ from .functions.schema_extract import (
     parse_dom,
     select_all,
     validate_schema,
-    _outer_html,
 )
+from .functions.scrape import outer_html
 from .functions.schema_infer import generate_schema
 from .operators.fetch import fetch_stage
 
@@ -188,7 +188,7 @@ class GoogleSearchCrawler(BaseCrawler):
             if root is not None:
                 section = select_all(root, hint)
                 if section:
-                    fragment = _outer_html(section[0])
+                    fragment = outer_html(section[0])
                     if self._llm is not None:
                         # the reference always asks the LLM, feeding it
                         # the shrunken page (crawler.py:72,79-123) —

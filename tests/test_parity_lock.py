@@ -6,13 +6,30 @@ must equal digests recorded from the unmodified tree.
   ``perfbench/expected.json``.
 - the synth pages of the sf0.001 fixture (they take the DOM walk's
   direct events) against a literal recorded here.
+- the first 200 ``extract_web`` seed 11 pages through every other DOM
+  pass (tables, pruning, BM25, fit_html, CSS/XPath extraction, schema
+  inference), on the driver, against literals recorded here.
 
-Digests are perfbench's order-independent per-column ``xxhash64`` sums,
-so a single changed byte in any column of any row fails the test."""
+Stage digests are perfbench's order-independent per-column ``xxhash64``
+sums; the DOM-pass digests hash each page's output in page order. So a
+single changed byte in any output of any page fails the test."""
+
+import hashlib
 
 from perfbench import checks, corpus
 
+from crawl4ai_spark.functions.content_filter import (
+    bm25_filter_blocks,
+    prune_filter_blocks,
+)
+from crawl4ai_spark.functions.html_tools import preprocess_html_for_schema
+from crawl4ai_spark.functions.schema_extract import (
+    json_css_extract,
+    json_xpath_extract,
+)
+from crawl4ai_spark.functions.schema_infer import infer_schema
 from crawl4ai_spark.functions.scrape import scrape_stage
+from crawl4ai_spark.functions.tables import extract_data_tables
 from crawl4ai_spark.synth import generate_pages
 
 # recorded from the unmodified tree: scrape_stage over
@@ -48,3 +65,54 @@ def test_extract_web_seed11_matches_recorded(spark):
 def test_synth_pages_match_recorded(spark, sf_dir):
     df = generate_pages(spark, sf_dir).select("url", "html")
     assert _digests(df) == SYNTH_SF0001
+
+
+# recorded from the tree before the DOM walk, text and serializer
+# helpers moved into scrape.py: per pass, the first 16 hex digits of a
+# sha256 over repr(output) + NUL for each page, in page order
+DOM_PASSES_SEED11 = {
+    "tables": "354dfb6d13099ee9",
+    "prune": "7f984d99bd4820c5",
+    "bm25": "1596978b018daf80",
+    "fit_html": "11f46d54296ee2ed",
+    "css": "61e32089ab63f56a",
+    "xpath": "6841f6d31525b683",
+    "infer_schema": "dc06df2f5efbeb67",
+}
+
+# one text and one html field per engine; the html field serializes
+# links whose hrefs hold unescaped ``&``
+_SCHEMA_CSS = {"baseSelector": "article > p", "fields": [
+    {"name": "text", "type": "text"},
+    {"name": "link", "selector": "a", "type": "html"},
+]}
+_SCHEMA_XPATH = {"baseSelector": "//article/p", "fields": [
+    {"name": "text", "type": "text"},
+    {"name": "link", "selector": ".//a", "type": "html"},
+]}
+
+_DOM_PASSES = {
+    "tables": extract_data_tables,
+    "prune": prune_filter_blocks,
+    "bm25": bm25_filter_blocks,  # query derived from the page
+    "fit_html": preprocess_html_for_schema,
+    "css": lambda h: json_css_extract(h, _SCHEMA_CSS),
+    "xpath": lambda h: json_xpath_extract(h, _SCHEMA_XPATH),
+    "infer_schema": infer_schema,
+}
+
+
+def test_dom_passes_seed11_match_recorded():
+    """No Spark session: the pages are the first 200 of the 600 that
+    ``test_extract_web_seed11_matches_recorded`` builds (the generator
+    draws pages in order from one seeded rng)."""
+    texts = list(corpus.documents(corpus.SF_DOCS["sf0.1"])["text"])
+    pages = [h.decode("utf-8") for h in corpus.web_pages(11, texts, 200)["html"]]
+    digests = {}
+    for name, fn in _DOM_PASSES.items():
+        h = hashlib.sha256()
+        for page in pages:
+            h.update(repr(fn(page)).encode())
+            h.update(b"\0")
+        digests[name] = h.hexdigest()[:16]
+    assert digests == DOM_PASSES_SEED11

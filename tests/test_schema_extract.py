@@ -252,22 +252,3 @@ def test_basefields_runtime_error_falls_back_to_default():
     )
     assert out and out[0]["t"] == "foo text"
     assert out[0].get("x", "dflt") == "dflt"
-
-
-def test_deep_page_selectors_never_recurse_out():
-    """Adversarially deep pages must not RecursionError anywhere in
-    the selector/XPath path (parents index, text walkers)."""
-    from crawl4ai_spark.functions.schema_extract import (
-        json_css_extract,
-        json_xpath_extract,
-    )
-
-    deep = "<div>" * 3000 + '<p id="x">leaf</p>' + "</div>" * 3000
-    out = json_css_extract(
-        deep, {"baseSelector": "p#x", "fields": [{"name": "t", "type": "text"}]}
-    )
-    assert out == [{"t": "leaf"}]
-    out2 = json_xpath_extract(
-        deep, {"baseSelector": "//p", "fields": [{"name": "t", "type": "text"}]}
-    )
-    assert out2 == [{"t": "leaf"}]

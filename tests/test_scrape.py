@@ -185,3 +185,119 @@ def test_scrape_stage_survives_poisoned_batch(spark, sf_dir):
     assert len(out) == 12
     healthy = [r for r in out if "poison" not in r["url"]]
     assert len(healthy) == 8 and all(r["success"] for r in healthy)
+
+
+def test_walk_reads_children_after_resuming():
+    """``_walk`` reads a node's children only when the consumer resumes
+    it, so a consumer that replaces ``n.children`` while holding ``n``
+    (the tag-removal and fit_html passes do) changes what is walked
+    next; untouched, the order is the recursive preorder."""
+    from crawl4ai_spark.functions.scrape import _walk, parse_dom
+
+    html = "<div><p>a<b>b</b></p><script>s</script><i>c</i></div>tail"
+
+    def preorder(n):
+        yield n
+        for c in n.children:
+            yield from preorder(c)
+
+    root = parse_dom(html)
+    assert [id(n) for n in _walk(root)] == [id(n) for n in preorder(root)]
+    seen = []
+    for n in _walk(root):
+        seen.append(n.tag or n.attrs["text"])
+        n.children = [c for c in n.children if c.tag not in ("script", "p")]
+    assert seen == ["#root", "div", "i", "c", "tail"]
+
+
+DEEP_DEPTH = 1500
+DEEP_TABLE = (
+    "<table><thead><tr><th>key</th><th>value</th></tr></thead><tbody>"
+    + "".join(f"<tr><td>k{i}</td><td>{i}</td></tr>" for i in range(3))
+    + "</tbody></table>"
+)
+DEEP_PAGE = (
+    "<html><head><title>leaf table</title><script>var x = 1;</script>"
+    "</head><body>" + '<div style="margin:0">word ' * DEEP_DEPTH
+    + '<p id="x">leaf</p>' + DEEP_TABLE + "</div>" * DEEP_DEPTH
+    + "</body></html>"
+)
+
+
+def _deep_cases():
+    from crawl4ai_spark.functions.content_filter import (
+        _find_body,
+        bm25_filter_blocks,
+        clean_element,
+        prune_filter_blocks,
+    )
+    from crawl4ai_spark.functions.html_tools import preprocess_html_for_schema
+    from crawl4ai_spark.functions.schema_extract import (
+        json_css_extract,
+        json_xpath_extract,
+    )
+    from crawl4ai_spark.functions.schema_infer import infer_schema
+    from crawl4ai_spark.functions.scrape import parse_dom
+    from crawl4ai_spark.functions.tables import extract_data_tables
+
+    leaf = [{"name": "t", "type": "text"}]
+    n = DEEP_DEPTH
+    # expected values were taken from the recursive implementations run
+    # under a raised recursion limit
+    return {
+        "json_css_extract": (
+            lambda h: json_css_extract(h, {"baseSelector": "p#x", "fields": leaf}),
+            [{"t": "leaf"}],
+        ),
+        "json_xpath_extract": (
+            lambda h: json_xpath_extract(h, {"baseSelector": "//p", "fields": leaf}),
+            [{"t": "leaf"}],
+        ),
+        "extract_data_tables": (
+            extract_data_tables,
+            [{"headers": ["key", "value"],
+              "rows": [["k0", "0"], ["k1", "1"], ["k2", "2"]],
+              "caption": "", "summary": "", "score": 10.0}],
+        ),
+        "prune_filter_blocks": (
+            prune_filter_blocks,
+            ['<div style="margin:0">word ' * n + '<p id="x">leaf</p>'
+             + DEEP_TABLE + "</div>" * n],
+        ),
+        "bm25_filter_blocks": (bm25_filter_blocks, []),
+        "clean_element": (
+            lambda h: clean_element(_find_body(parse_dom(h))),
+            "<body>" + "<div>word" * n + "<p>leaf</p>" + DEEP_TABLE
+            + "</div>" * n + "</body>",
+        ),
+        # the processed page, not the raw-input fallback
+        "preprocess_html_for_schema": (
+            preprocess_html_for_schema,
+            "<html><body>" + "<div>word " * n + '<p id="x">leaf</p>'
+            + DEEP_TABLE + "</div>" * n + "</body></html>",
+        ),
+        "infer_schema": (
+            infer_schema,
+            {"baseSelector": "tr", "fields": [
+                {"name": "td", "selector": "td", "type": "text"},
+                {"name": "td_2", "selector": "td", "type": "text"}]},
+        ),
+        "scrape_one": (
+            lambda h: scrape_one(h, "https://example.org/deep")["text"],
+            "leaf table" + "word " * n + "leafkeyvaluek00k11k22",
+        ),
+    }
+
+
+@pytest.mark.parametrize("entry", [
+    "json_css_extract", "json_xpath_extract", "extract_data_tables",
+    "prune_filter_blocks", "bm25_filter_blocks", "clean_element",
+    "preprocess_html_for_schema", "infer_schema", "scrape_one",
+])
+def test_deep_page_never_recurses_out(entry):
+    """Page depth is attacker-controlled: every DOM entry point must
+    process a page nested deeper than the interpreter's recursion limit
+    and give the same result as at any other depth, not raise (which
+    kills the Arrow batch) or fall back to the raw input."""
+    fn, expected = _deep_cases()[entry]
+    assert fn(DEEP_PAGE) == expected
