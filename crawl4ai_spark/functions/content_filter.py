@@ -36,6 +36,7 @@ from .scrape import (
     _text_strip,
     _walk,
     outer_html,
+    outer_html_lengths,
     parse_dom,
 )
 
@@ -139,9 +140,8 @@ def _remove_tags(node: _Node, tags: set[str]) -> None:
 
 def _composite_score(node: _Node, text_len: int, tag_len: int,
                      link_text_len: int, min_word_threshold: int | None,
-                     text: str) -> float:
+                     word_count: int) -> float:
     if min_word_threshold:
-        word_count = text.count(" ") + 1
         if word_count < min_word_threshold:
             return -1.0
     score, total_weight = 0.0, 0.0
@@ -181,23 +181,37 @@ def _direct_link_text_len(node: _Node) -> int:
 def _prune(parent: _Node, node: _Node, threshold: float,
            threshold_type: str, min_word_threshold: int | None) -> None:
     """Top-down: score each element on its whole subtree, then remove it
-    from its parent or descend into its element children."""
+    from its parent or descend into its element children. A node's
+    subtree is unmodified when it is scored (removals only cut scored
+    nodes' children), so its sizes are summed bottom-up once up front:
+    markup length, and the length and spaces of ``_text_strip``'s
+    result (stripped runs joined with '')."""
+    html_len = outer_html_lengths(node)
+    text_len: dict[int, int] = {}
+    spaces: dict[int, int] = {}
+    for n in reversed(list(_walk(node))):
+        if n.tag == "":
+            t = n.attrs.get("text", "").strip()
+            text_len[id(n)], spaces[id(n)] = len(t), t.count(" ")
+        else:
+            text_len[id(n)] = sum(text_len[id(c)] for c in n.children)
+            spaces[id(n)] = sum(spaces[id(c)] for c in n.children)
     stack = [(parent, node)]
     while stack:
         parent, node = stack.pop()
-        text = _text_strip(node)
-        text_len = len(text)
-        tag_len = sum(len(outer_html(c)) for c in node.children)
+        tlen = text_len[id(node)]
+        tag_len = sum(html_len[id(c)] for c in node.children)
         link_text_len = _direct_link_text_len(node)
         score = _composite_score(
-            node, text_len, tag_len, link_text_len, min_word_threshold, text
+            node, tlen, tag_len, link_text_len, min_word_threshold,
+            spaces[id(node)] + 1,
         )
         if threshold_type == "fixed":
             should_remove = score < threshold
         else:
             tag_importance = TAG_IMPORTANCE.get(node.tag, 0.7)
-            text_ratio = text_len / tag_len if tag_len > 0 else 0
-            link_ratio = link_text_len / text_len if text_len > 0 else 1
+            text_ratio = tlen / tag_len if tag_len > 0 else 0
+            link_ratio = link_text_len / tlen if tlen > 0 else 1
             th = threshold
             if tag_importance > 1:
                 th *= 0.8

@@ -980,6 +980,27 @@ def outer_html(node: _Node) -> str:
     return "".join(out)
 
 
+def outer_html_lengths(node: _Node) -> dict[int, int]:
+    """``len(outer_html(n))`` for every node ``n`` under ``node``, keyed
+    by ``id(n)``, in one pass: reversed preorder visits every child
+    before its parent, so each length is its start and end tag plus
+    its children's sums. Valid while the subtree is unmodified."""
+    lens: dict[int, int] = {}
+    for n in reversed(list(_walk(node))):
+        tag = n.tag
+        if tag == "":
+            lens[id(n)] = len(n.attrs.get("text", ""))
+            continue
+        total = sum(lens[id(c)] for c in n.children)
+        if tag != "#root":
+            attrs = [(k, v) for k, v in n.attrs.items() if v is not None]
+            total += len(_event_html(("s", tag, attrs)))
+            if tag not in VOID_TAGS:
+                total += len(tag) + 3  # </tag>
+        lens[id(n)] = total
+    return lens
+
+
 def markdown_from_dom(
     root: _Node,
     base_url: str = "",

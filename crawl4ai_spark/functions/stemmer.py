@@ -13,6 +13,8 @@ examples in tests/test_stemmer.py.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 VOWELS = set("aeiouy")
 DOUBLES = {"bb", "dd", "ff", "gg", "mm", "nn", "pp", "rr", "tt"}
 LI_ENDING = set("cdeghkmnrt")
@@ -100,6 +102,9 @@ def _has_vowel(word: str, end: int) -> bool:
     return any(_is_vowel(word, i) for i in range(end))
 
 
+# a page's vocabulary is small next to its token count (BM25 stems
+# every token of every block), and stem_word is pure
+@lru_cache(maxsize=1 << 16)
 def stem_word(word: str) -> str:
     """Stem one lowercase word (mixed case is lowered first)."""
     word = word.lower()

@@ -1079,35 +1079,25 @@ class CrawlRun:
         def _synthetic_results(df, partition_id: int, status: str):
             """Result rows for URLs that never reached the fetch stage
             (robots_blocked / abandoned): lineage columns ride through,
-            every extraction column is a typed null. One definition —
-            a RESULT_COLS change edits this once, not per status."""
+            and the union below fills every extraction column with a
+            null of the fetched side's type. One definition — a
+            RESULT_COLS change edits this once, not per status."""
             return df.select(
                 "url", "url_hash", "host", "depth", "priority",
                 "parent_url_hash", "dfs_key",
                 F.lit(partition_id).alias("partition_id"),
                 F.lit(status).alias("fetch_status"),
                 F.lit(False).alias("success"),
-                *[F.lit(None).cast("string").alias(c) for c in (
-                    "title", "headings")],
-                F.lit(None).cast("map<string,string>").alias("meta"),
-                *[F.lit(None).cast("string").alias(c) for c in (
-                    "text_extracted", "raw_markdown",
-                    "markdown_with_citations", "references_markdown")],
                 F.lit(0).alias("n_links"),
-                F.lit(None).cast(LINKS_TYPE).alias("links"),
-                F.lit(None).cast("int").alias("http_status"),
                 F.col("url").alias("final_url"),
-                F.lit(None).cast("string").alias("fetch_error"),
-                F.lit(None).cast("string").alias("etag"),
-                F.lit(None).cast("string").alias("last_modified"),
             )
 
-        blocked_results = _synthetic_results(blocked, -1, "robots_blocked")
-        abandoned_results = _synthetic_results(abandoned, -3, "abandoned")
-
-        all_results = results.unionByName(blocked_results).unionByName(
-            abandoned_results
-        )
+        all_results = results
+        for df, pid, status in ((blocked, -1, "robots_blocked"),
+                                (abandoned, -3, "abandoned")):
+            all_results = all_results.unionByName(
+                _synthetic_results(df, pid, status), allowMissingColumns=True
+            )
         if hits is not None:
             hit_results = hits.select(
                 "url", "url_hash", "host", "depth", "priority",
@@ -1142,13 +1132,18 @@ class CrawlRun:
         # rows between executors, and the salted fetch layout keeps
         # partition_id lineage within each file.
         self._sec(r, "results")
-        all_results.select(*RESULT_COLS).coalesce(n_part).write.mode(
-            "overwrite"
-        ).parquet(self._results_path(r))
+        out = all_results.select(*RESULT_COLS)
+        out.coalesce(n_part).write.mode("overwrite").parquet(
+            self._results_path(r)
+        )
 
         # re-read results: breaks lineage — the scrape UDF ran exactly
-        # once (during the write above); link discovery reads parquet
-        persisted = self.spark.read.parquet(self._results_path(r))
+        # once (during the write above); link discovery reads parquet.
+        # The schema just written is known: a schemaless read would run
+        # a footer-inference job every round
+        persisted = self.spark.read.schema(out.schema).parquet(
+            self._results_path(r)
+        )
 
         # cache write (S10): append fresh fetches not already cached
         if cache is not None:

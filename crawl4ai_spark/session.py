@@ -9,6 +9,8 @@ Settings chosen for the 100 TB target (and harmless at test scale):
   per-row Python UDFs are banned by BASELINE.json's input_hint.
 - shuffle.partitions sized to cores at test scale; on a real cluster
   AQE's coalescing makes the initial number a ceiling, not a target.
+- a crawl round's driver-side planning cost cut at build time, see
+  BUILD_CONFS.
 """
 
 from __future__ import annotations
@@ -38,6 +40,30 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Confs that cut the driver's per-round planning cost (a crawl round
+# handles a few hundred rows, so planning, not data, sets its fixed
+# cost). Applied only by get_spark(), see its docstring.
+BUILD_CONFS: dict[str, str] = {
+    # Static SQLConf: the generated-class cache, 100 entries by default.
+    # Its key includes the class loader, so the driver and the executor
+    # threads each compile a body once. A perfbench crawl_polite process
+    # needs 191 distinct compiles (390 classes, about 2.4 KB of bytecode
+    # each, under 1 MB in all; extract_web needs 28); at 100 entries it
+    # compiled 234, at 10-13 ms each, re-compiling what it had evicted.
+    # 1,000 holds that working set five times over.
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    # On by default in pyspark 4.1: every F.* function and Column call
+    # makes three extra py4j calls (a conf read, PySparkCurrentOrigin
+    # set and clear) to record its Python call site for error messages,
+    # about half of a crawl round's py4j traffic. pyspark reads the
+    # flag once per process and caches it (errors/utils.py,
+    # _enable_debugging_cache), so it must be set when the session is
+    # built. Off, an error's DataFrame context lacks the Python call
+    # site; nothing in the engine reads it.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+
+
 def ensure_runtime_confs(spark: SparkSession) -> None:
     """Apply the engine's required runtime-settable confs to ANY session.
 
@@ -60,6 +86,14 @@ def get_spark(
     app_name: str = "crawl4ai_spark",
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """Build (or return the running) local session with the engine's
+    confs: RUNTIME_CONFS, which ensure_runtime_confs() also applies to a
+    session built elsewhere, and BUILD_CONFS, which take effect only
+    here. BUILD_CONFS are not in RUNTIME_CONFS because neither can be
+    applied to a live session: the codegen cache size is a static conf,
+    and pyspark reads the DataFrame-debugging flag once per process and
+    caches it. A session built elsewhere runs the same plans, at the
+    higher per-round planning cost."""
     cores = parallelism or DEFAULT_CPUS
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -76,7 +110,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**RUNTIME_CONFS, **BUILD_CONFS}.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

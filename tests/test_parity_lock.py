@@ -15,6 +15,7 @@ sums; the DOM-pass digests hash each page's output in page order. So a
 single changed byte in any output of any page fails the test."""
 
 import hashlib
+from functools import lru_cache
 
 from perfbench import checks, corpus
 
@@ -28,7 +29,13 @@ from crawl4ai_spark.functions.schema_extract import (
     json_xpath_extract,
 )
 from crawl4ai_spark.functions.schema_infer import infer_schema
-from crawl4ai_spark.functions.scrape import scrape_stage
+from crawl4ai_spark.functions.scrape import (
+    _walk,
+    outer_html,
+    outer_html_lengths,
+    parse_dom,
+    scrape_stage,
+)
 from crawl4ai_spark.functions.tables import extract_data_tables
 from crawl4ai_spark.synth import generate_pages
 
@@ -102,17 +109,37 @@ _DOM_PASSES = {
 }
 
 
-def test_dom_passes_seed11_match_recorded():
-    """No Spark session: the pages are the first 200 of the 600 that
+@lru_cache(maxsize=1)
+def _seed11_pages() -> tuple[str, ...]:
+    """The first 200 of the 600 pages that
     ``test_extract_web_seed11_matches_recorded`` builds (the generator
     draws pages in order from one seeded rng)."""
     texts = list(corpus.documents(corpus.SF_DOCS["sf0.1"])["text"])
-    pages = [h.decode("utf-8") for h in corpus.web_pages(11, texts, 200)["html"]]
+    return tuple(
+        h.decode("utf-8") for h in corpus.web_pages(11, texts, 200)["html"]
+    )
+
+
+def test_dom_passes_seed11_match_recorded():
+    """No Spark session; the seed-11 pages, see ``_seed11_pages``."""
     digests = {}
     for name, fn in _DOM_PASSES.items():
         h = hashlib.sha256()
-        for page in pages:
+        for page in _seed11_pages():
             h.update(repr(fn(page)).encode())
             h.update(b"\0")
         digests[name] = h.hexdigest()[:16]
     assert digests == DOM_PASSES_SEED11
+
+
+def test_outer_html_lengths_match_serializer_seed11():
+    """Pruning scores each element by its children's markup length,
+    summed bottom-up once (``outer_html_lengths``) instead of
+    serializing every subtree: each sum must equal the serializer's."""
+    for page in _seed11_pages():
+        root = parse_dom(page)
+        lens = outer_html_lengths(root)
+        nodes = list(_walk(root))
+        assert len(lens) == len(nodes)
+        for n in nodes:
+            assert lens[id(n)] == len(outer_html(n))
