@@ -2422,13 +2422,13 @@ def q_crawl_bfs(spark, sf_dir):
     is mirrored by the SQL oracle below; the per-round semantics are
     additionally pinned by the simulator tests in tests/test_frontier.py.
 
-    r4 widening: the crawl runs with ``snapshot_tables=True`` (the
-    north star's Iceberg-style round checkpoints, snaptable.py) and the
-    returned rows are REASSEMBLED from the snapshot log — round 0 via
-    time travel to the first snapshot, each later round via an
-    incremental scan between consecutive snapshots — so the gate row
-    also proves adoption + time travel + incremental reads reproduce
-    the crawl outputs bit-exactly."""
+    r4 widening: the returned rows are REASSEMBLED from the results
+    table's snapshot log (the north star's Iceberg-style round
+    checkpoints, snaptable.py), whose snapshots are the round commits
+    of every crawl — round 0 via time travel to the first snapshot,
+    each later round via an incremental scan between consecutive
+    snapshots — so the gate row also proves adoption + time travel +
+    incremental reads reproduce the crawl outputs bit-exactly."""
     import tempfile
     from functools import reduce
 
@@ -2439,7 +2439,7 @@ def q_crawl_bfs(spark, sf_dir):
     pages = _pages(spark, sf_dir)
     seeds = [r["url"] for r in pages.select("url").orderBy("url").limit(5).collect()]
     wd = tempfile.mkdtemp(prefix="crawl_q_")
-    cfg = CrawlConfig(max_depth=2, round_seconds=16.0, snapshot_tables=True)
+    cfg = CrawlConfig(max_depth=2, round_seconds=16.0)
     run_crawl(spark, pages, seeds, wd, cfg, max_rounds=2)
     run = CrawlRun(spark, pages, wd, cfg)
     t = run.table("results")

@@ -8,19 +8,19 @@ the ``TerminalUI`` panels (``crawler_monitor.py:17-348``).
 Spark-native reading: the reference monitor is a *second bookkeeping
 path* — the dispatcher calls ``add_task``/``update_task`` around every
 coroutine and a thread renders the dict. In the Spark engine every fact
-the dashboard shows already lands in the run's artifacts (round
-manifests, the per-partition metrics table, the results/frontier
-parquet), so the monitor is a pure READER: derived state that can't
-drift from the crawl, works post-hoc and mid-run (including on a
-crashed run: a results round without its manifest shows IN_PROGRESS),
-and aggregates URL-level facts with bounded Spark jobs instead of a
-driver-side dict of every task.
+the dashboard shows already lands in the run's artifacts (the round
+commits in the results table's snapshot log, the per-partition metrics
+table, the results/frontier parquet), so the monitor is a pure READER:
+derived state that can't drift from the crawl, works post-hoc and
+mid-run (including on a crashed run: a results round whose snapshot
+never committed shows IN_PROGRESS), and aggregates URL-level facts
+with bounded Spark jobs instead of a driver-side dict of every task.
 
 Status mapping (CrawlStatus names kept verbatim):
 - COMPLETED    result row with success (incl. cache hits and 304s)
 - FAILED       result row without success (robots_blocked, abandoned,
                http_error, error, miss)
-- IN_PROGRESS  result rows of a round whose manifest was never
+- IN_PROGRESS  result rows of a round whose results snapshot was never
                committed (crash mid-round — the resume target)
 - QUEUED       frontier rows scheduled past the last committed round
 
@@ -35,11 +35,12 @@ deferral plays the requeue role here and feeds ``requeued_count``.
 from __future__ import annotations
 
 import glob
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .operators.frontier import round_log
 
 QUEUED = "QUEUED"
 IN_PROGRESS = "IN_PROGRESS"
@@ -54,24 +55,16 @@ class CrawlerMonitor:
         self.workdir = workdir
         self.urls_total = urls_total
 
-    # -- committed rounds (manifest-written-last is the commit point) ----
+    # -- committed rounds (the results snapshot is the commit point) ------
     def committed_rounds(self) -> list[int]:
-        out = []
-        for p in glob.glob(os.path.join(self.workdir, "_manifest_*.json")):
-            base = os.path.basename(p)
-            try:
-                out.append(int(base[len("_manifest_"):-len(".json")]))
-            except ValueError:
-                continue
-        return sorted(out)
+        return sorted(round_log(self.spark, self.workdir))
 
     def manifests(self) -> list[dict]:
-        ms = []
-        for r in self.committed_rounds():
-            with open(os.path.join(self.workdir, f"_manifest_{r}.json")) as f:
-                ms.append(json.load(f))
-        return ms
+        log = round_log(self.spark, self.workdir)
+        return [log[r] for r in sorted(log)]
 
+    # every round directory, committed or not: a round still in flight
+    # (or killed) shows its rows as IN_PROGRESS
     def _round_dirs(self, sub: str) -> list[tuple[int, str]]:
         out = []
         for p in glob.glob(os.path.join(self.workdir, sub, "round=*")):
@@ -164,7 +157,7 @@ class CrawlerMonitor:
                 "discovered_round",
                 "fetch_round",
                 # clamped at 0: a crash between a frontier round's
-                # write and its manifest commit leaves rows discovered
+                # write and its round commit leaves rows discovered
                 # in a round PAST pending_round, which would otherwise
                 # read as negative wait and drag the queue averages
                 F.greatest(

@@ -15,7 +15,9 @@ DataFrame job per round:
               -> in-round dedup -> anti-join url_seen -> capacity cap
       frontier_{r+1} = deferred ∪ new links ; url_seen += new links
       politeness state_{r+1} = backoff fold of results_r
-      manifest_r written LAST -> atomic round commit (resume point)
+      adopt frontier/url_seen/politeness_{r+1} into their snapshot
+      tables, then results_r LAST: that snapshot, whose summary is the
+      round's counters, is the atomic round commit (resume point)
 
 Scale shape: two shuffles per round (fetch join on url, link dedup/
 anti-join on url_hash) plus the explicit salted repartition; everything
@@ -24,15 +26,14 @@ else is narrow. Hot hosts are spread across ``salt`` partitions while
 priority order inside each slice — the north-rule skew answer.
 
 Determinism: every ordering is (priority desc, url asc); jitter is
-hash-derived; all round outputs are written before the manifest, so a
-kill anywhere leaves either a complete round or a cleanly re-runnable
-one. Re-running a partial round overwrites (never appends) its outputs.
+hash-derived; all round outputs are written before the results
+snapshot commits, so a kill anywhere leaves either a complete round or
+a cleanly re-runnable one: a round first forgets everything from
+itself on (``CrawlRun._forget_from``), then rewrites it.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import time
 import uuid
@@ -45,6 +46,7 @@ from ..functions.scrape import scrape_stage
 from ..functions.urls import canonicalize_udf, host_no_port, url_hash
 from .fetch import fetch_status_expr as _fetch_status_expr
 from .politeness import (
+    STATE_SCHEMA,
     PolitenessState,
     _leaf_indices,
     select_within_budget,
@@ -52,7 +54,7 @@ from .politeness import (
 )
 from .robots import with_robots_decision
 from .scorers import keyword_relevance_score
-from .seen import SeenFilter
+from .seen import SEEN_SCHEMA, SIDECAR_DIR, SeenFilter
 
 FRONTIER_SCHEMA = (
     "url string, url_hash bigint, host string, priority double, depth int, "
@@ -211,13 +213,6 @@ class CrawlConfig:
     # S1/S2 seam: swap in UrllibFetcher for live HTTP, a recorded
     # fetcher in tests — the crawl loop is identical either way.
     fetcher: object | None = None
-    # register each round's results/next-frontier outputs as snapshots
-    # of Iceberg-style tables at workdir/tables/{results,frontier}
-    # (snaptable.SnapshotTable.add_files — metadata-only, no byte copy,
-    # no Spark jobs): time travel to any round, incremental "what did
-    # round r add" scans, rollback. The north star checkpoints crawl
-    # state "to Iceberg snapshots"; this is that, sans the missing jar.
-    snapshot_tables: bool = False
 
     def to_json(self) -> dict:
         return {
@@ -238,7 +233,6 @@ class CrawlConfig:
             "priority_aging": self.priority_aging,
             "trap_filter": self.trap_filter,
             "max_urls_per_host": self.max_urls_per_host,
-            "snapshot_tables": self.snapshot_tables,
             # scrape shaping must ride the manifest too: two runs
             # differing only in scrape_options would otherwise write
             # byte-identical config records (audit/repro blind spot)
@@ -290,14 +284,43 @@ def _priors_by_hash(priors) -> "DataFrame":
     )
 
 
+# snapshot tables of a crawl's state, each under workdir/tables/<name>;
+# results first, because its snapshot is the round commit and a cut
+# must un-commit before it removes anything else
+STATE_TABLES = ("results", "frontier", "url_seen", "politeness")
+# round-scoped directories: (dir, name prefix, first round forgotten
+# relative to r). A round's own outputs are named after it; its
+# post-round state (the next round's inputs) after r+1.
+_ROUND_DIRS = (
+    ("results", "round=", 0), ("metrics", "round=", 0),
+    ("robots", "r", 0), ("seen_aliases", "r", 0),
+    ("frontier", "round=", 1), ("politeness", "round=", 1),
+    ("url_seen", "round=", 1), (SIDECAR_DIR, "round=", 1),
+)
+_SEED = {"round": -1, "stage": "seed"}  # the state before round 0
+
+
 def _truncate_table_to_round(table, max_round: int) -> None:
     """Drop a crawl snapshot table's entries for rounds > ``max_round``
-    (metadata-only). Relies on snapshot ids being monotone in round, so
-    the earliest stale id minus one is a clean prefix cut."""
+    (metadata-only, one publish). Relies on snapshot ids being monotone
+    in round, so the earliest stale id minus one is a clean prefix
+    cut."""
     stale = [s["snapshot_id"] for s in table.snapshots()
              if s.get("summary", {}).get("round", -1) > max_round]
     if stale:
         table.drop_snapshots_since(min(stale) - 1)
+
+
+def round_log(spark: SparkSession, workdir: str) -> dict[int, dict]:
+    """Committed rounds of the crawl in ``workdir``: round -> the
+    counters ``run_round`` returned for it. They are the summaries of
+    the results table's snapshots; committing that snapshot commits the
+    round, so a round is complete exactly when it is here."""
+    from ..snaptable import SnapshotTable
+
+    t = SnapshotTable(spark, os.path.join(workdir, "tables", "results"))
+    return {s["summary"]["round"]: s["summary"] for s in t.snapshots()
+            if "round" in s["summary"]}
 
 
 def _parquet_rows(path: str) -> int:
@@ -479,7 +502,7 @@ class CrawlRun:
         self._round_rules = None
         os.makedirs(workdir, exist_ok=True)
 
-    # -- paths / manifests ---------------------------------------------------
+    # -- paths ---------------------------------------------------------------
 
     def _frontier_path(self, r: int) -> str:
         return os.path.join(self.workdir, "frontier", f"round={r}")
@@ -489,9 +512,6 @@ class CrawlRun:
 
     def _metrics_path(self, r: int) -> str:
         return os.path.join(self.workdir, "metrics", f"round={r}")
-
-    def _manifest_path(self, r: int) -> str:
-        return os.path.join(self.workdir, f"_manifest_{r}.json")
 
     def _robots_path(self, r: int) -> str:
         # no 'round=' spelling: these subdirs are read as an explicit
@@ -650,27 +670,73 @@ class CrawlRun:
             dim = spark.createDataFrame([], RULES_SCHEMA)
         return dim
 
+    # -- the commit log -----------------------------------------------------
+
     def latest_completed_round(self) -> int | None:
-        rounds = []
-        for name in os.listdir(self.workdir):
-            if name.startswith("_manifest_") and name.endswith(".json"):
-                rounds.append(int(name[len("_manifest_"):-len(".json")]))
-        return max(rounds) if rounds else None
+        log = round_log(self.spark, self.workdir)
+        return max(log) if log else None
 
     def manifest(self, r: int) -> dict:
-        with open(self._manifest_path(r)) as f:
-            return json.load(f)
+        """Committed counters of round ``r`` (its results snapshot's
+        summary)."""
+        return round_log(self.spark, self.workdir)[r]
 
-    def _write_manifest(self, r: int, payload: dict) -> None:
-        tmp = self._manifest_path(r) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._manifest_path(r))  # atomic round commit
+    def _seeded(self) -> bool:
+        """True once the seed committed (its url_seen adoption)."""
+        return any(s["summary"].get("stage") == "seed"
+                   for s in self.table("url_seen").snapshots())
+
+    def _adopt(self, name: str, path: str, summary: dict, schema=None) -> None:
+        """Register ``path``'s parquet files as a snapshot of state table
+        ``name`` (metadata-only: footer reads and one JSON publish, no
+        Spark job). A directory without data files commits an empty
+        snapshot. ``schema`` defaults to the table's fixed DDL; an
+        explicit schema keeps schema inference, a footer job, away."""
+        from pyspark.sql import types as T
+
+        if schema is None:
+            ddl = {"frontier": FRONTIER_SCHEMA, "url_seen": SEEN_SCHEMA,
+                   "politeness": STATE_SCHEMA}[name]
+            schema = T.StructType.fromDDL(ddl)
+        self.table(name).add_files(path, schema, summary=summary)
+
+    def _forget_from(self, r: int) -> None:
+        """Forget round ``r`` and every later one: cut every state table
+        to rounds <= r-1 (results first, which un-commits them in one
+        atomic publish), then remove the round-scoped outputs of rounds
+        >= r (results, metrics, robots increments, redirect aliases)
+        and the post-round state of rounds >= r+1 (frontier, seen deltas
+        and their cuckoo sidecars, politeness). Round r's inputs stay.
+        A kill part-way leaves files that the next call removes."""
+        import shutil
+
+        for name in STATE_TABLES:
+            _truncate_table_to_round(self.table(name), r - 1)
+        dropped_delta = False
+        for sub, prefix, offset in _ROUND_DIRS:
+            base = os.path.join(self.workdir, sub)
+            for name in os.listdir(base) if os.path.isdir(base) else ():
+                j = name[len(prefix):]
+                if name.startswith(prefix) and j.isdigit() and int(j) >= r + offset:
+                    shutil.rmtree(os.path.join(base, name))
+                    dropped_delta |= sub in ("url_seen", SIDECAR_DIR)
+        if dropped_delta:
+            # a cached sidecar of a removed delta would keep marking its
+            # URLs as seen
+            self.seen.invalidate_cache()
 
     # -- seeding -------------------------------------------------------------
 
     def seed(self, urls: list[str]) -> None:
-        """Round-0 frontier from a seed list (canonical URLs)."""
+        """Round-0 frontier from a seed list (canonical URLs).
+
+        Commits to the snapshot log like a round: frontier/round=0 is
+        adopted, then url_seen/round=0, and that second adoption is the
+        seed's commit (:meth:`_seeded`). Both tables are emptied first,
+        so a seed that was killed before its commit simply runs again.
+        """
+        for name in ("frontier", "url_seen"):
+            self.table(name).drop_snapshots_since(0)
         self._sec(0, "seed")
         rows = [(u, f"{i:06d}") for i, u in enumerate(sorted(set(urls)))]
         df = self.spark.createDataFrame(rows, "url string, dfs_key string").select(
@@ -699,7 +765,16 @@ class CrawlRun:
         df.coalesce(1).sortWithinPartitions(F.desc("priority"), "url").write.mode(
             "overwrite"
         ).parquet(self._frontier_path(0))
-        self.seen.add(df, 0)
+        self._adopt("frontier", self._frontier_path(0), _SEED)
+        # the delta comes from the file just written, as in run_round:
+        # re-running `df` would recompute its columns and, without
+        # assume_unique (the seed list is deduplicated above), add a
+        # dropDuplicates shuffle
+        self.seen.add(
+            self.spark.read.schema(FRONTIER_SCHEMA).parquet(self._frontier_path(0)),
+            0, assume_unique=True,
+        )
+        self._adopt("url_seen", os.path.join(self.seen.path, "round=0"), _SEED)
 
     # -- one round -----------------------------------------------------------
 
@@ -771,16 +846,10 @@ class CrawlRun:
     def run_round(self, r: int) -> dict:
         cfg = self.config
         t0 = time.perf_counter()
-        # crash cleanup: a partially-run round may have written its
-        # url_seen delta for r+1; the anti-join below must not see it
-        import shutil
-
-        for partial_delta in (
-            os.path.join(self.workdir, "url_seen", f"round={r + 1}"),
-            os.path.join(self.seen.sidecar_path, f"round={r + 1}"),
-        ):
-            if os.path.exists(partial_delta):
-                shutil.rmtree(partial_delta)
+        # a killed attempt of this round (or of a later one) may have
+        # left outputs, state and uncommitted snapshots behind: the
+        # seen anti-join below must not see its url_seen delta
+        self._forget_from(r)
 
         frontier = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
             self._frontier_path(r)
@@ -789,27 +858,13 @@ class CrawlRun:
         frontier_count = _parquet_rows(self._frontier_path(r))
 
         # cumulative admitted count (= seen-set size) carried through the
-        # manifests: at 10^10 URLs a per-round seen.count() full scan is
-        # the one genuine scale-killer in max_pages mode — the manifest
-        # already knows the number. Fallback to the scan only on a
-        # resume path that lacks the key (old manifests).
-        if r == 0:
-            admitted_before = frontier_count
-        else:
-            try:
-                admitted_before = int(self.manifest(r - 1)["cum_admitted_next"])
-            except (FileNotFoundError, KeyError):
-                admitted_before = self.seen.count()
-                # under alias_redirects the seen set outgrows the
-                # admitted count by the alias volume — subtract it so
-                # the max_pages budget isn't shrunk on legacy-manifest
-                # resume (footer reads only, no jobs)
-                alias_root = os.path.join(self.workdir, "seen_aliases")
-                if os.path.isdir(alias_root):
-                    for d in sorted(os.listdir(alias_root)):
-                        admitted_before -= _parquet_rows(
-                            os.path.join(alias_root, d)
-                        )
+        # round commits: at 10^10 URLs a per-round seen.count() full scan
+        # is the one genuine scale-killer in max_pages mode — the
+        # previous round's commit already knows the number
+        admitted_before = (
+            frontier_count if r == 0
+            else int(self.manifest(r - 1)["cum_admitted_next"])
+        )
 
         # robots gate (broadcast dim join); under robots_fetch the dim
         # is acquired live first (fetch-on-miss increment, one job)
@@ -1158,6 +1213,8 @@ class CrawlRun:
         # distributed Spark agg beyond the 256 MB guard
         mtable = _driver_metrics(self._results_path(r))
         if mtable is not None:
+            import shutil
+
             import pyarrow.parquet as _pq
 
             mpath = self._metrics_path(r)
@@ -1316,14 +1373,14 @@ class CrawlRun:
 
         # capacity cap (T2): remaining global page budget, measured
         # against every URL ever admitted (= the seen set, tracked via
-        # the manifests — no per-round full scan)
+        # the round commits — no per-round full scan)
         if cfg.max_pages is not None:
             remaining = max(cfg.max_pages - admitted_before, 0)
             fresh = fresh.orderBy(F.desc("priority"), F.asc("url")).limit(remaining)
 
         # deferred rows keep the round they were admitted in (lineage);
         # fresh links are stamped with the next round — the distinction
-        # lets the manifest counters come from ONE aggregation below
+        # lets the round counters come from ONE aggregation below
         next_frontier = deferred.select(
             "url", "url_hash", "host", "priority", "depth", "parent_url_hash",
             "round", "dfs_key",
@@ -1346,7 +1403,7 @@ class CrawlRun:
         # filter scan of the just-written (small) frontier file replaces
         # what used to be a second full anti-join against every seen
         # shard. Idempotent on round re-run: the r+1 delta is deleted at
-        # round start and the frontier file is overwritten.
+        # round start (_forget_from) and the frontier file is overwritten.
         frontier_next = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
             self._frontier_path(r + 1)
         )
@@ -1394,7 +1451,7 @@ class CrawlRun:
         )
         self.politeness.save(new_state, r + 1)
 
-        # manifest counters WITHOUT Spark jobs: the metrics table is
+        # round counters WITHOUT Spark jobs: the metrics table is
         # bounded (one row per partition id) so a pyarrow driver read
         # replaces the aggregation job; the next-frontier counters come
         # from parquet footers + a row-group-stat-pruned read of the
@@ -1444,158 +1501,87 @@ class CrawlRun:
             "wall_s": round(time.perf_counter() - t0, 3),
             "config": self.config.to_json(),
         }
-        if cfg.snapshot_tables:
-            self._snapshot_round(r, persisted.schema, frontier_next.schema)
-        self._write_manifest(r, counts)
+        self._commit_round(r, persisted.schema, counts)
         return counts
 
     # -- snapshot tables (Iceberg-style round checkpoints) -------------------
 
     def table(self, name: str):
-        """Snapshot table over this crawl's outputs ("results" or
-        "frontier") — requires CrawlConfig(snapshot_tables=True)."""
+        """Snapshot table of this crawl's state, one of
+        :data:`STATE_TABLES`: "results" holds one snapshot per committed
+        round, whose summary is the round's counters; "frontier",
+        "url_seen" and "politeness" hold the state each round (and the
+        seed, summary round -1) left for the next one."""
         from ..snaptable import SnapshotTable
 
         return SnapshotTable(
             self.spark, os.path.join(self.workdir, "tables", name)
         )
 
-    def _snapshot_round(self, r: int, results_schema, frontier_schema) -> None:
-        """Adopt round ``r``'s outputs AND post-round state as table
-        snapshots (add_files — metadata-only, zero byte copies): the
+    def _commit_round(self, r: int, results_schema, counts: dict) -> None:
+        """Adopt round ``r``'s post-round state (the round-r+1 frontier,
+        url_seen delta and politeness state), then its results with
+        ``counts`` as the snapshot summary: that last adoption is the
+        round commit. Metadata-only, zero byte copies, no Spark job. The
         north star checkpoints "cuckoo filter shards, frontier offsets,
-        politeness counters" to Iceberg snapshots; here that is the
-        url_seen delta, the next-round frontier, and the politeness
-        state dir (seen-filter cuckoo sidecars are derived data,
-        rebuilt from the deltas they index). Idempotent across
-        crash-rerun: a round that died after adoption but before its
-        manifest re-runs in place, so stale snapshots with
-        summary.round >= r are dropped first (their files were
-        overwritten by the rerun)."""
-        from pyspark.sql import types as T
-
-        from .politeness import STATE_SCHEMA
-        from .seen import SEEN_SCHEMA
-
-        # explicit schemas keep adoption strictly job-free: schema=None
-        # would fall back to spark.read.parquet inference, which can
-        # launch a footer-reading job over many files
-        seen_schema = T.StructType.fromDDL(SEEN_SCHEMA)
-        pol_schema = T.StructType.fromDDL(STATE_SCHEMA)
-        seen_dir = os.path.join(self.workdir, "url_seen")
-        pol_dir = os.path.join(self.workdir, "politeness")
-        entries: list[tuple] = [
-            ("results", self._results_path(r), results_schema,
-             {"round": r}),
-        ]
-        if r == 0:
-            # seed-time state (written by seed(), not by any round)
-            entries += [
-                ("frontier", self._frontier_path(0), frontier_schema,
-                 {"round": 0, "stage": "seed"}),
-                ("url_seen", os.path.join(seen_dir, "round=0"), seen_schema,
-                 {"round": 0, "stage": "seed"}),
-            ]
-        entries += [
-            ("frontier", self._frontier_path(r + 1), frontier_schema,
-             {"round": r}),
-            ("url_seen", os.path.join(seen_dir, f"round={r + 1}"), seen_schema,
-             {"round": r}),
-            ("politeness", os.path.join(pol_dir, f"round={r + 1}"), pol_schema,
-             {"round": r}),
-        ]
-        dropped: set[str] = set()
-        for name, path, schema, summary in entries:
-            t = self.table(name)
-            if name not in dropped:
-                _truncate_table_to_round(t, r - 1)
-                dropped.add(name)
-            # empty partitioned writes emit no data files — nothing to
-            # adopt (and nothing to infer a schema from)
-            if os.path.exists(path) and glob.glob(
-                os.path.join(path, "**", "*.parquet"), recursive=True
-            ):
-                t.add_files(path, schema, summary=summary)
+        politeness counters" to Iceberg snapshots; the seen-filter
+        cuckoo sidecars are derived data, rebuilt from the deltas they
+        index, so they are not adopted."""
+        state = {"round": r}
+        self._adopt("frontier", self._frontier_path(r + 1), state)
+        self._adopt("url_seen", os.path.join(self.seen.path, f"round={r + 1}"),
+                    state)
+        self._adopt("politeness", self.politeness._path(r + 1), state)
+        self._adopt("results", self._results_path(r), counts, results_schema)
 
     # -- driver loop ---------------------------------------------------------
 
     def run(self, max_rounds: int) -> list[dict]:
-        """Run (or resume) up to ``max_rounds`` rounds; returns manifests.
+        """Run (or resume) up to ``max_rounds`` rounds; returns every
+        round's committed counters.
 
-        Resume point: the last round with a manifest is complete; work
-        restarts at the next round, whose inputs (frontier, seen deltas,
-        politeness state) were all written before that manifest.
+        Resume point: the last round in the results log is complete;
+        work restarts at the next round, whose inputs (frontier, seen
+        deltas, politeness state) were all adopted before that commit.
+        A crawl whose last round left an empty frontier is finished.
         """
-        last = self.latest_completed_round()
-        start = 0 if last is None else last + 1
-        out = [self.manifest(i) for i in range(start)]
-        for r in range(start, max_rounds):
-            if not os.path.exists(self._frontier_path(r)):
+        log = round_log(self.spark, self.workdir)
+        out = [log[i] for i in sorted(log)]
+        if not out and not self._seeded():
+            return out
+        for r in range(len(out), max_rounds):
+            if out and out[-1]["next_frontier"] == 0 and out[-1]["deferred"] == 0:
                 break
-            m = self.run_round(r)
-            out.append(m)
-            if m["next_frontier"] == 0 and m["deferred"] == 0:
-                break
+            out.append(self.run_round(r))
         return out
 
     def rewind_to_round(self, k: int) -> None:
         """Forget every round after ``k`` so :meth:`run` replays them.
 
-        Removes the manifests, results/metrics outputs, and post-round
-        state (frontier, seen deltas + filter sidecars, politeness) of
-        rounds > k — round ``k``'s own outputs (the round-k+1 frontier /
-        seen delta / politeness state) are KEPT, being the resume
-        inputs — and truncates the snapshot tables to round <= k.
-        With an unchanged config the replay is bit-identical (the
-        engine is deterministic given frontier + seen + politeness
-        state; NB a shared result cache in a non-bypass ``cache_mode``
-        retains the forgotten rounds' entries, so the replay may
-        legitimately hit cache where the original fetched), which is
-        the north star's "resumes mid-[crawl] with identical crawl
-        ordering and URL-seen set" exercised as an explicit rewind
-        instead of a crash.
+        One :meth:`_forget_from` (``k + 1``): the snapshot tables are cut
+        to round <= k and the outputs and post-round state of later
+        rounds are removed. Round ``k``'s own outputs (the round-k+1
+        frontier / seen delta / politeness state) are KEPT, being the
+        resume inputs. With an unchanged config the replay is
+        bit-identical (the engine is deterministic given frontier +
+        seen + politeness state; NB a shared result cache in a
+        non-bypass ``cache_mode`` retains the forgotten rounds' entries,
+        so the replay may legitimately hit cache where the original
+        fetched), which is the north star's "resumes mid-[crawl] with
+        identical crawl ordering and URL-seen set" exercised as an
+        explicit rewind instead of a crash.
 
-        Crash-safe: rounds are forgotten one at a time DESCENDING, the
-        manifest first — so at every intermediate point the invariant
-        "manifest r exists ⇒ round r's outputs and all earlier state
-        are intact" holds; a kill mid-rewind leaves an ordinary
-        resumable crawl (re-issue the rewind to finish it). Round r's
-        possibly-half-deleted r+1 seen delta is re-cleaned by
-        run_round's own crash cleanup.
+        Crash-safe: the results log is cut first, in one atomic
+        metadata publish, so every later round un-commits at once; a
+        kill after that leaves an ordinary resumable crawl whose next
+        round removes the rest.
         """
-        import shutil
-
         if k < 0:
             raise ValueError("rewind_to_round(k): k must be >= 0")
         last = self.latest_completed_round()
         if last is None or k >= last:
             return
-        for r in range(last, k, -1):
-            try:
-                os.unlink(self._manifest_path(r))  # FIRST: marks r dirty
-            except FileNotFoundError:
-                pass
-            shutil.rmtree(self._results_path(r), ignore_errors=True)
-            shutil.rmtree(self._metrics_path(r), ignore_errors=True)
-            shutil.rmtree(self._frontier_path(r + 1), ignore_errors=True)
-            for state_dir in ("url_seen", "politeness"):
-                shutil.rmtree(
-                    os.path.join(self.workdir, state_dir, f"round={r + 1}"),
-                    ignore_errors=True)
-            # robots increments and redirect-alias files are IN-round
-            # state (produced during round r), so forgetting round r
-            # forgets them — the replay re-derives identical contents
-            shutil.rmtree(self._robots_path(r), ignore_errors=True)
-            shutil.rmtree(self._alias_path(r), ignore_errors=True)
-            # the sidecar path does not depend on filter_kind: a crawl
-            # run with the prefilter may be rewound by a run without it
-            shutil.rmtree(
-                os.path.join(self.seen.sidecar_path, f"round={r + 1}"),
-                ignore_errors=True)
-        self.seen.invalidate_cache()
-        if self.config.snapshot_tables:
-            for name in ("results", "frontier", "url_seen", "politeness"):
-                _truncate_table_to_round(self.table(name), k)
+        self._forget_from(k + 1)
 
     def close(self) -> None:
         """Release session-lifetime resources (the persisted priors
@@ -1619,12 +1605,11 @@ def run_crawl(
     config: CrawlConfig | None = None,
     max_rounds: int = 3,
 ) -> list[dict]:
-    """Convenience wrapper: seed (unless resuming) and run the loop."""
+    """Convenience wrapper: seed (unless the log says the crawl was
+    seeded) and run the loop."""
     run = CrawlRun(spark, pages, workdir, config)
     try:
-        if run.latest_completed_round() is None and not os.path.exists(
-            run._frontier_path(0)
-        ):
+        if not run._seeded():
             run.seed(seeds)
         return run.run(max_rounds)
     finally:

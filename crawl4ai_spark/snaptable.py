@@ -1107,10 +1107,10 @@ class SnapshotTable:
         ``snapshot_id`` current again (0 → logically empty table).
 
         Metadata-only — data files stay in place.  This is the rerun
-        seam for the crawl engine: a round that crashed after snapshot
-        adoption but before its manifest is re-run in place, so its
-        stale snapshot entries (pointing at overwritten files) must be
-        dropped before re-adoption."""
+        and rewind seam for the crawl engine: a round that crashed
+        after adopting some of its state but before its results commit
+        is re-run in place, so its stale snapshot entries (pointing at
+        overwritten files) must be dropped before re-adoption."""
         for _ in range(self.MAX_COMMIT_RETRIES):
             meta, expected = self._load_versioned()
             if expected == 0:

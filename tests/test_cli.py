@@ -9,6 +9,7 @@ import pytest
 from click.testing import CliRunner
 
 from crawl4ai_spark.cli import cli, parse_key_values
+from crawl4ai_spark.operators.frontier import round_log
 from crawl4ai_spark.synth import generate_pages, page_url
 
 
@@ -129,7 +130,7 @@ def test_deep_crawl_and_monitor(spark, corpus, tmp_path):
     assert res.exit_code == 0, res.output
     rows = json.loads(open(out_file).read())
     assert isinstance(rows, list) and rows[0]["url"] == url
-    assert os.path.exists(os.path.join(wd, "_manifest_0.json"))
+    assert 0 in round_log(spark, wd)  # round 0 committed
     # the CLI must not have stopped the shared session
     assert spark.range(1).count() == 1
 

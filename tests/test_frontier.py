@@ -18,6 +18,8 @@ from pyspark.sql import functions as F
 from crawl4ai_spark.operators.frontier import CrawlConfig, CrawlRun, run_crawl
 from crawl4ai_spark.operators.politeness import BASE_DELAY, update_state
 from crawl4ai_spark.operators.robots import rules_table, synthetic_robots
+from crawl4ai_spark.operators.seen import SeenFilter
+from crawl4ai_spark.snaptable import SnapshotTable
 from crawl4ai_spark.synth import (
     external_url,
     generate_pages,
@@ -145,29 +147,126 @@ def test_resume_identical_to_uninterrupted(spark, corpus, tmp_path):
     }
 
 
-def test_crashed_round_rerun_is_idempotent(spark, corpus, tmp_path):
-    """Simulate a crash after round 1 wrote outputs but before its
-    manifest: deleting the manifest must make run() redo round 1 and
-    land in the identical state."""
-    pages, langs = corpus
-    seeds = [page_url(11, langs[11])]
-    cfg = CrawlConfig(max_depth=2, round_seconds=4.0)
-    wd = str(tmp_path / "crash")
-    run_crawl(spark, pages, seeds, wd, cfg, max_rounds=2)
-    run = CrawlRun(spark, pages, wd, cfg)
-    before = sorted(
-        map(tuple, run.results().select("url", "round", "success").collect())
-    )
-    seen_before = {x["url"] for x in run.seen.load().collect()}
+class _Crash(RuntimeError):
+    """The injected kill: raised at one job or commit boundary."""
 
-    os.remove(os.path.join(wd, "_manifest_1.json"))  # crash point
-    run_crawl(spark, pages, seeds, wd, cfg, max_rounds=2)
-    after = sorted(
-        map(tuple, run.results().select("url", "round", "success").collect())
-    )
-    seen_after = {x["url"] for x in run.seen.load().collect()}
-    assert before == after
-    assert seen_before == seen_after
+
+# Every boundary a crash can hit in a default-config crawl, counted
+# from the start of the seed or of a round: the k-th section tag
+# (`_sec`, before that section's jobs), the k-th snapshot adoption
+# (`add_files`, after its files are written and before they are
+# committed), and the seed's seen-delta write (after the seed frontier
+# is on disk; in a round it follows the "seen" section tag at once).
+# `crash_baseline` counts these calls over the seed and two rounds, so
+# a new boundary fails the coverage test below.
+_SEAMS = {
+    "sec": (CrawlRun, "_sec"),
+    "add_files": (SnapshotTable, "add_files"),
+    "seen_add": (SeenFilter, "add"),
+}
+_SEED_POINTS = [("sec", 1), ("add_files", 1), ("seen_add", 1), ("add_files", 2)]
+_ROUND_POINTS = [("sec", k) for k in range(1, 6)] + [
+    ("add_files", k) for k in range(1, 5)]
+
+
+def _crawl_state(spark, pages, wd, cfg):
+    """Everything a resumed crawl must reproduce: the rows of every
+    round directory of results, seen deltas, frontier and politeness
+    state, the committed counters (minus wall time), and the snapshot
+    log of every table (summary, source dirs, rows)."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    run = CrawlRun(spark, pages, wd, cfg)
+
+    def rows(path):
+        return sorted(json.dumps(r, sort_keys=True, default=str)
+                      for r in pq.read_table(path).to_pylist())
+
+    dirs = {}
+    for sub in ("results", "url_seen", "frontier", "politeness"):
+        base = os.path.join(wd, sub)
+        for d in sorted(os.listdir(base)) if os.path.isdir(base) else []:
+            dirs[f"{sub}/{d}"] = rows(os.path.join(base, d))
+    last = run.latest_completed_round()
+    counters = [
+        {k: v for k, v in run.manifest(i).items() if k != "wall_s"}
+        for i in range(0 if last is None else last + 1)]
+    log, root = {}, os.path.realpath(wd)
+    for name in ("results", "frontier", "url_seen", "politeness"):
+        t = run.table(name)
+        log[name] = [
+            ({k: v for k, v in s["summary"].items() if k != "wall_s"},
+             sorted({os.path.relpath(os.path.dirname(f["path"]), root)
+                     for f in t.files(s["snapshot_id"])}),
+             sum(f["rows"] for f in t.files(s["snapshot_id"])))
+            for s in t.snapshots()]
+    return dirs, counters, log
+
+
+@pytest.fixture(scope="module")
+def crash_baseline(spark, corpus, tmp_path_factory):
+    """One uncrashed crawl (seed + rounds 0 and 1) and the number of
+    calls it makes to each crash seam."""
+    pages, langs = corpus
+    seeds = [page_url(d, langs[d]) for d in (3, 11, 40)]
+    cfg = CrawlConfig(max_depth=2, round_seconds=4.0)
+    wd = str(tmp_path_factory.mktemp("crash") / "baseline")
+    calls = dict.fromkeys(_SEAMS, 0)
+    with pytest.MonkeyPatch.context() as mp:
+        for seam in _SEAMS:
+            cls, attr = _SEAMS[seam]
+
+            def counted(*a, _seam=seam, _orig=getattr(cls, attr), **kw):
+                calls[_seam] += 1
+                return _orig(*a, **kw)
+
+            mp.setattr(cls, attr, counted)
+        run_crawl(spark, pages, seeds, wd, cfg, max_rounds=2)
+    return pages, seeds, cfg, calls, _crawl_state(spark, pages, wd, cfg)
+
+
+def test_crash_points_cover_every_boundary(crash_baseline):
+    *_, calls, state = crash_baseline
+    assert calls == {"sec": 1 + 2 * 5, "add_files": 2 + 2 * 4, "seen_add": 3}
+    dirs, counters, log = state
+    assert len(counters) == 2 and dirs["frontier/round=2"]
+
+
+@pytest.mark.parametrize("first_round", [None, 0, 1],
+                         ids=["seed", "round0", "round1"])
+def test_crash_at_every_boundary_resumes_identically(
+        spark, crash_baseline, tmp_path, first_round):
+    """Kill the crawl at each boundary of the seed, round 0 or round 1,
+    then resume with run_crawl: results, seen deltas, frontier and
+    politeness state of every round, the committed counters and the
+    snapshot log equal the uncrashed crawl's. Each kill starts from the
+    crawl as it stood before that step: an empty workdir for the seed,
+    else a crawl cut back to the round with ``_forget_from``."""
+    pages, seeds, cfg, _, want = crash_baseline
+    wd = str(tmp_path / "wd")
+    for seam, k in _SEED_POINTS if first_round is None else _ROUND_POINTS:
+        if first_round is None:
+            shutil.rmtree(wd, ignore_errors=True)
+        else:
+            run_crawl(spark, pages, seeds, wd, cfg, max_rounds=first_round)
+            CrawlRun(spark, pages, wd, cfg)._forget_from(first_round)
+        cls, attr = _SEAMS[seam]
+        orig, calls = getattr(cls, attr), [0]
+
+        def crashing(*a, _orig=orig, _calls=calls, _k=k, **kw):
+            _calls[0] += 1
+            if _calls[0] == _k:
+                raise _Crash
+            return _orig(*a, **kw)
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(cls, attr, crashing)
+            with pytest.raises(_Crash):
+                run_crawl(spark, pages, seeds, wd, cfg, max_rounds=2)
+        run_crawl(spark, pages, seeds, wd, cfg, max_rounds=2)
+        assert _crawl_state(spark, pages, wd, cfg) == want, f"{seam} #{k}"
 
 
 def test_seen_delta_layout(spark, corpus, tmp_path):
@@ -608,8 +707,8 @@ def test_trap_filter_blocks_trap_links(spark, tmp_path):
 
 def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
     """rewind_to_round(k) + run() reproduces the original crawl bit-for-
-    bit: same manifests (minus wall time), same results, same snapshot
-    tables — the engine is deterministic given round-k state."""
+    bit: same committed counters (minus wall time), same results, same
+    snapshot tables — the engine is deterministic given round-k state."""
     import os
 
     from crawl4ai_spark.synth import generate_pages
@@ -618,7 +717,7 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
     seeds = [r["url"] for r in
              pages.select("url").orderBy("url").limit(5).collect()]
     wd = str(tmp_path / "c")
-    cfg = CrawlConfig(max_depth=3, round_seconds=1e6, snapshot_tables=True,
+    cfg = CrawlConfig(max_depth=3, round_seconds=1e6,
                       seen_filter_kind="cuckoo")
     run_crawl(spark, pages, seeds, wd, cfg, max_rounds=3)
     run = CrawlRun(spark, pages, wd, cfg)
@@ -639,7 +738,7 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
         for name in ("results", "frontier", "url_seen", "politeness"):
             t = run.table(name)
             tables[name] = [
-                (s["summary"],
+                ({k: v for k, v in s["summary"].items() if k != "wall_s"},
                  sorted({os.path.dirname(f["path"])
                          for f in t.files(s["snapshot_id"])}),
                  sum(f["rows"] for f in t.files(s["snapshot_id"])))
@@ -650,9 +749,10 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
     run.rewind_to_round(1)
     assert run.latest_completed_round() == 1
     assert not os.path.exists(os.path.join(wd, "results", f"round={last}"))
-    # snapshot tables truncated with the manifests
-    assert all(s["summary"].get("round", -1) <= 1
-               for s in run.table("results").snapshots())
+    # every state table is cut with the results log
+    for name in ("results", "frontier", "url_seen", "politeness"):
+        assert all(s["summary"]["round"] <= 1
+                   for s in run.table(name).snapshots())
     run.run(max_rounds=last + 1)
     assert run.latest_completed_round() == last
     assert fingerprint() == before
@@ -668,12 +768,10 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
     with _pytest.raises(ValueError):
         fresh.rewind_to_round(-1)
 
-    # crash-safety invariant: after forgetting ONLY the last round
-    # (what a kill mid-rewind leaves, since rewind walks descending),
-    # the state is an ordinary resumable crawl
+    # forgetting ONLY the last round is an ordinary resumable crawl too
     run.rewind_to_round(last - 1)
     assert run.latest_completed_round() == last - 1
-    for i in range(last):  # every remaining manifest readable
+    for i in range(last):  # every remaining commit readable
         run.manifest(i)
     run.run(max_rounds=last + 1)
     assert fingerprint() == before
@@ -685,7 +783,7 @@ def test_rewind_to_round_replays_identically(spark, sf_dir, tmp_path):
         return sorted(d for d in os.listdir(os.path.join(wd, name))
                       if d.startswith("round="))
 
-    plain = CrawlConfig(max_depth=3, round_seconds=1e6, snapshot_tables=True)
+    plain = CrawlConfig(max_depth=3, round_seconds=1e6)
     CrawlRun(spark, pages, wd, plain).rewind_to_round(1)
     assert round_dirs("url_seen_cuckoo") == round_dirs("url_seen")
 

@@ -28,8 +28,7 @@ def test_corpus_lifecycle_end_to_end(spark, sf_dir, tmp_path):
     seeds = [r["url"] for r in
              pages.select("url").orderBy("url").limit(5).collect()]
     wd = str(tmp_path / "crawl")
-    cfg = CrawlConfig(max_depth=3, round_seconds=1e6,
-                      snapshot_tables=True, trap_filter=True)
+    cfg = CrawlConfig(max_depth=3, round_seconds=1e6, trap_filter=True)
     run_crawl(spark, pages, seeds, wd, cfg, max_rounds=3)
     run = CrawlRun(spark, pages, wd, cfg)
     t = run.table("results")

@@ -2,7 +2,6 @@
 dashboard facts derived from run artifacts must agree with the round
 manifests and the results table, including crash visibility."""
 
-import json
 import os
 
 import pytest
@@ -16,6 +15,7 @@ from crawl4ai_spark.monitor import (
     CrawlerMonitor,
 )
 from crawl4ai_spark.operators.frontier import CrawlConfig, run_crawl
+from crawl4ai_spark.snaptable import SnapshotTable
 from crawl4ai_spark.synth import generate_pages, page_url
 
 
@@ -82,20 +82,22 @@ def test_summary_mirrors_manifests(spark, crawled):
 def test_crash_round_shows_in_progress(spark, crawled):
     wd, ms = crawled
     last = max(m["round"] for m in ms)
-    manifest = os.path.join(wd, f"_manifest_{last}.json")
-    with open(manifest) as f:
-        saved = f.read()
-    os.remove(manifest)  # simulate a crash after the results write
+    t = SnapshotTable(spark, os.path.join(wd, "tables", "results"))
+    commit = t.snapshots()[-1]
+    assert commit["summary"]["round"] == last
+    # simulate a crash after the results write: drop the round commit
+    t.drop_snapshots_since(commit["snapshot_id"] - 1)
     try:
         mon = CrawlerMonitor(spark, wd)
+        assert mon.committed_rounds() == list(range(last))
         counts = mon.status_counts()
         n_round = spark.read.parquet(
             os.path.join(wd, "results", f"round={last}")
         ).count()
         assert counts[IN_PROGRESS] == n_round
     finally:
-        with open(manifest, "w") as f:
-            f.write(saved)
+        t.add_files(os.path.join(wd, "results", f"round={last}"),
+                    t.schema(), summary=commit["summary"])
 
 
 def test_wait_rounds_and_queue_stats(spark, crawled):

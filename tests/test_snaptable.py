@@ -523,9 +523,9 @@ def test_add_files_hive_partitioned(spark, tmp_path):
 
 
 def test_crawl_round_snapshots(spark, sf_dir, tmp_path):
-    """CrawlConfig(snapshot_tables=True): each round lands as a results/
-    frontier snapshot — time travel per round, incremental = that
-    round's pages — and a crash-rerun doesn't double-register."""
+    """Each round lands as a results/frontier snapshot — time travel
+    per round, incremental = that round's pages — and a crash-rerun
+    doesn't double-register."""
     from crawl4ai_spark.operators.frontier import (
         CrawlConfig, CrawlRun, run_crawl)
     from crawl4ai_spark.synth import generate_pages
@@ -534,7 +534,7 @@ def test_crawl_round_snapshots(spark, sf_dir, tmp_path):
     seeds = [r["url"] for r in
              pages.select("url").orderBy("url").limit(3).collect()]
     wd = str(tmp_path / "crawl")
-    cfg = CrawlConfig(max_depth=3, round_seconds=1e6, snapshot_tables=True)
+    cfg = CrawlConfig(max_depth=3, round_seconds=1e6)
     run_crawl(spark, pages, seeds, wd, cfg, max_rounds=3)
     run = CrawlRun(spark, pages, wd, cfg)
     rounds = run.latest_completed_round() + 1
@@ -555,24 +555,28 @@ def test_crawl_round_snapshots(spark, sf_dir, tmp_path):
     assert sorted(r["url"] for r in inc.select("url").collect()) == \
         sorted(r["url"] for r in last.select("url").collect())
 
-    # crash-rerun: delete the last manifest (round r outputs stay on
-    # disk, snapshots already adopted) and resume — adoption must not
-    # duplicate the round
-    os.unlink(os.path.join(wd, f"_manifest_{rounds - 1}.json"))
+    # crash-rerun: drop the last round commit (round r outputs stay on
+    # disk, its state snapshots stay adopted) and resume — adoption
+    # must not duplicate the round
+    t.drop_snapshots_since(snaps[-1]["snapshot_id"] - 1)
     run2 = CrawlRun(spark, pages, wd, cfg)
     run2.run(max_rounds=rounds)
     t2 = run2.table("results")
     assert [s["summary"]["round"] for s in t2.snapshots()] == \
         list(range(rounds))
     assert t2.read().count() == run2.results().count()
+    for name in ("frontier", "url_seen", "politeness"):
+        got = [s["summary"]["round"] for s in run2.table(name).snapshots()]
+        assert got == ([] if name == "politeness" else [-1]) + \
+            list(range(rounds))
 
     # the full north-star state set is checkpointed: frontier offsets
     # (incl. the seed round), url_seen deltas, politeness counters
     tf = run.table("frontier")
     assert [s["summary"] for s in tf.snapshots()][:2] == [
-        {"round": 0, "stage": "seed"}, {"round": 0}]
+        {"round": -1, "stage": "seed"}, {"round": 0}]
     ts = run.table("url_seen")
-    assert ts.snapshots()[0]["summary"] == {"round": 0, "stage": "seed"}
+    assert ts.snapshots()[0]["summary"] == {"round": -1, "stage": "seed"}
     # seen table current == engine's full seen set, with shard read
     # from the stored column
     seen_rows = ts.read()
@@ -637,28 +641,34 @@ def test_streaming_append_exactly_once(spark, tmp_path):
 
 
 def test_snapshot_adoption_is_job_free(spark, sf_dir, tmp_path):
-    """_snapshot_round is pure metadata: footer reads + json links,
-    ZERO Spark jobs — the checkpoint must not tax the crawl round."""
+    """_commit_round is pure metadata: footer reads + json links,
+    ZERO Spark jobs — the round commit must not tax the crawl round."""
     from crawl4ai_spark.operators.frontier import (
-        CrawlConfig, CrawlRun, run_crawl)
+        STATE_TABLES, CrawlConfig, CrawlRun, _truncate_table_to_round,
+        run_crawl)
     from crawl4ai_spark.synth import generate_pages
 
     pages = generate_pages(spark, sf_dir)
     seeds = [r["url"] for r in
              pages.select("url").orderBy("url").limit(3).collect()]
     wd = str(tmp_path / "c")
-    cfg = CrawlConfig(max_depth=2, round_seconds=1e6, snapshot_tables=True)
+    cfg = CrawlConfig(max_depth=2, round_seconds=1e6)
     run_crawl(spark, pages, seeds, wd, cfg, max_rounds=2)
     run = CrawlRun(spark, pages, wd, cfg)
     res_schema = run.table("results").schema()
-    fr_schema = run.table("frontier").schema()
+    counts = run.manifest(1)
+    for name in STATE_TABLES:  # un-commit round 1, then commit it again
+        _truncate_table_to_round(run.table(name), 0)
+    assert run.latest_completed_round() == 0
 
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    run._snapshot_round(1, res_schema, fr_schema)  # full drop + re-adopt
+    run._commit_round(1, res_schema, counts)
     after = set(tracker.getJobIdsForGroup(None))
     assert after == before
     # and the re-adoption left the tables correct
+    assert run.latest_completed_round() == 1
+    assert run.manifest(1) == counts
     assert run.table("results").read().count() == run.results().count()
 
 
