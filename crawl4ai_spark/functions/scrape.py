@@ -22,9 +22,10 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import lru_cache
 from html import unescape
 from html.parser import HTMLParser
-from urllib.parse import urljoin, urlparse
+from urllib.parse import urljoin, urlparse, urlsplit
 
 from .urls import get_base_domain_py
 
@@ -330,28 +331,61 @@ def extract_metadata(root: _Node) -> dict:
     return meta
 
 
+_DOT_SEGMENTS = frozenset((".", ".."))
+
+
+@lru_cache(maxsize=64)
+def _origin(base: str) -> str | None:
+    """``scheme://netloc`` of an http(s) base with a host, as urljoin
+    rebuilds it (lowercased scheme, netloc verbatim); None otherwise."""
+    try:
+        s = urlsplit(base)
+    except ValueError:  # e.g. an unbalanced '[' in the netloc
+        return None
+    if s.scheme in ("http", "https") and s.netloc:
+        return s.scheme + "://" + s.netloc
+    return None
+
+
 def _abs_url(base: str, href: str) -> str:
-    """urljoin with a validated fast path: an absolute lowercase-scheme
-    href with a nonempty authority and no query/fragment round-trips
-    urljoin unchanged (cross-scheme returns verbatim; same-scheme
-    urlunparse∘urlparse is the identity on this shape — the '#'/'?'
-    guard excludes the empty-fragment/query normalization cases, the
-    authority guard excludes 'http://'). Equality is fuzz-pinned in
-    tests/test_markdown_fastpath.py; urljoin was ~14% of the extract
-    stage's profile."""
-    if (
-        href.startswith(("https://", "http://"))
-        and "#" not in href
-        and "?" not in href
-        # urlsplit strips embedded tab/newline/CR (WHATWG, bpo-43882);
-        # such hrefs must go through urljoin to get the same stripping
-        and "\t" not in href
-        and "\n" not in href
-        and "\r" not in href
-    ):
-        rest = href[href.index("://") + 3:]
-        if rest and rest[0] not in "/?#":
-            return href
+    """urljoin with two validated fast paths, each returning what
+    urljoin would (fuzz-pinned by ``test_abs_url_matches_urljoin``):
+
+    - an absolute lowercase ``http(s)://`` href with a nonempty
+      authority and no query/fragment is returned as it is: cross-scheme
+      urljoin returns it verbatim, and same-scheme urlunparse∘urlparse is
+      the identity on this shape (the '#'/'?' guard excludes the
+      empty-fragment/query normalization, the authority guard
+      ``http://``);
+    - a root-relative href against an http(s) base with a host is the
+      base's ``scheme://netloc`` (cached per base) plus the href,
+      provided urljoin would leave the href alone: no '#', no empty
+      query ('/p?' loses its '?'), and in the path before '?' no ';'
+      (urlparse splits params off the last segment and drops an empty
+      one), no '//' (which also keeps out '//host' hrefs) and no
+      '.'/'..' segment (the segment walk resolves them).
+
+    Both guards send hrefs holding tab/newline/CR to urljoin: urlsplit
+    strips them (WHATWG, bpo-43882). On ``extract_web`` pages every href
+    is root-relative; there urljoin was about half of ``extract_links``."""
+    if "\t" in href or "\n" in href or "\r" in href or "#" in href:
+        return urljoin(base, href)
+    if href.startswith(("https://", "http://")):
+        if "?" not in href:
+            rest = href[href.index("://") + 3:]
+            if rest and rest[0] not in "/?#":
+                return href
+    elif href[:1] == "/":
+        origin = _origin(base)
+        path, q, query = href.partition("?")
+        if (
+            origin is not None
+            and (query or not q)
+            and ";" not in path
+            and "//" not in path
+            and ("/." not in path or not _DOT_SEGMENTS.intersection(path.split("/")))
+        ):
+            return origin + href
     return urljoin(base, href)
 
 
@@ -1007,29 +1041,131 @@ def markdown_from_dom(
     excluded: frozenset[str] = DEFAULT_EXCLUDED_TAGS,
 ) -> str:
     """raw_markdown straight off the cleaned DOM, byte-identical to
-    ``html_to_markdown(cleaned_html(root), url)`` (the test oracle)
-    without serializing and reparsing the page's safe prefix.
+    ``html_to_markdown(cleaned_html(root), url)`` (the oracle: one
+    ``feed()`` of the whole string S, ``feed("")`` and ``close()``,
+    three ``goahead`` passes) while tokenizing only the unsafe text runs.
 
-    Walks ``_dom_events`` into one ``_MdState``. Up to the first unsafe
-    event (a text run holding ``&`` or ``<``, or a start tag with ``"``
-    in a value) every event goes straight to its handlers, as the event
-    that tokenizing it yields: a tag that is not ``safe`` gets its values
-    unescaped, as the tokenizer reads a double-quoted value. So the
-    tokenizer of the whole string would reach the first unsafe event on
-    a token boundary with nothing held. From there the rest of the page
-    is serialized and run through the same calls ``html_to_markdown``
-    makes: one ``feed()``, ``feed("")`` and ``close()``."""
+    Walks ``_dom_events`` into one ``_MdState``. An event with no ``&``
+    or ``<`` in its text goes straight to its handlers, as the event that
+    tokenizing it yields: a tag that is not ``safe`` gets its values
+    unescaped, as the tokenizer reads a double-quoted value. That is
+    exact while the invariant holds: the oracle's first pass stands at
+    this event's offset in S on a token boundary, outside CDATA, having
+    made the same handler calls, and nothing is held in ``p.rawdata``.
+
+    An unsafe text run T (holding ``&`` or ``<``) is tokenized together
+    with the event A after it (a tag: adjacent text is merged):
+    ``p.feed(T + html(A))``, after which direct dispatch resumes if
+    ``p.rawdata == ""`` and ``p.cdata_elem is None``. Preconditions:
+    A's tag name holds no ``=``, no attribute name of A starts with
+    ``=``, and A's values hold no ``"`` and no ``>``; if T holds ``<``,
+    T holds no ``"``, ``'`` or ``<!``.
+
+    Why the chunk C = T + html(A) ends where the oracle's first pass
+    does. C is a prefix of the rest of S, so a pass over C makes the same
+    calls as the oracle's as long as no read goes past C's end; C ends in
+    A's closing ``>``, the only ``>`` in html(A). The reads of
+    ``HTMLParser.goahead`` (CPython 3.11) and ``_markupbase`` that can go
+    past a chunk's end:
+
+    - Quoted attribute values (``locatestarttagend_tolerant``,
+      ``attrfind_tolerant``): a quote opens one only right after
+      ``=\\s*``. T has no quotes when it can open a tag, so a tag opened
+      in T meets quotes only in A. It cannot open one in A's tag name,
+      which holds no ``=``; the space after the tag name cannot start a
+      ``\\s*=`` as no attribute name starts with ``=``; so it reads A's
+      ``k="v"`` pairs aligned, and v closes inside A. Without these two rules a misaligned read can
+      open a quote inside a value of A that closes past the chunk, in a
+      tag that still ends at A's ``>``, e.g. ``<p =k="a b ='c">`` or a
+      tag named ``p="x`` after a run ``<b x``. Every other run in a tag
+      stops at A's ``>``.
+    - Searches for a terminator (``>`` of end tags, PIs, bogus comments
+      and doctypes, ``--\\s*>``, ``]]>``/``]>``, ``</script>``): one
+      found in C is found at the same place in S, since the match cannot
+      straddle C's final ``>``; one not found returns -1 or waits in
+      CDATA, a hold. A value ``>`` in A would end such a construct
+      inside A and turn A's tail into text that S continues, so it is
+      excluded (``<em>&lt;/b x<textarea title="a>b">...``).
+    - Text runs end at the next ``&`` or ``<``, and entity and charref
+      names at the next non-name character, at the latest A's ``<``.
+      Fed without A, ``AT&Tend.`` reads as ``&Tend;`` + ``.``; in S,
+      as ``&Tend.;``.
+    - The ``&#`` bail tests ``";" in rawdata[i:]`` and then breaks the
+      pass: the oracle would spend one of its three passes there. A
+      bail always holds input (at least the ``;`` or the ``&#``), so the
+      ``rawdata`` check catches it; three ``&#1a`` bails end the oracle
+      at ``close()``.
+    - The marked-section fallback of ``TolerantMarkupMixin`` consumes to
+      the end of the buffer when no ``]>`` follows; ``<!`` in T excludes
+      it.
+    - Holds at the end of the buffer (``<`` or ``&`` last, an incomplete
+      tag, comment or entity, a declaration's name at the buffer end):
+      each breaks the pass with input held, caught by the ``rawdata``
+      check. A ``<script``/``<style`` start tag opened in T that
+      swallows A leaves CDATA mode on with nothing held, caught by the
+      ``cdata_elem`` check (``<p>&lt;style x=</p><body>y</body>``).
+
+    So with the preconditions, a check that passes means C was tokenized
+    as in S and the invariant holds after A. Counterexamples to each
+    precondition (the output differs from the oracle without it):
+    ``<em>&lt;/b x<textarea title="a>b">two words&amp;</textarea></em>``,
+    ``<p>&lt;b x =&quot;<i>y</i> z&quot; w</p>`` (and with ``'``),
+    ``<p>&lt;![x <i>y</i> ]&gt; z</p><p>w</p>``.
+
+    A run that fails a precondition or is the page's last event, or a
+    start tag with ``"`` in a value, ends the loop: the rest of the page
+    from there is serialized
+    and fed in one ``feed()``, then ``feed("")`` and ``close()``, the
+    oracle's passes exactly, as no earlier feed broke a pass. A failed
+    check means the chunk may have spent a pass or read past its end: the
+    page is made again from a fresh ``_MdState`` without resyncing (direct
+    dispatch up to the first unsafe event, then the rest)."""
+    return markdown_regime(root, base_url, excluded)[0]
+
+
+def markdown_regime(
+    root: _Node,
+    base_url: str = "",
+    excluded: frozenset[str] = DEFAULT_EXCLUDED_TAGS,
+) -> tuple[str, str]:
+    """``markdown_from_dom``'s markdown and the way it was made:
+    ``"direct"`` (no unsafe event), ``"resync"`` (every unsafe run
+    resynced), ``"rest"`` (the rest of the page fed from a run or tag
+    that may not resync) or ``"recompute"`` (a post-feed check failed)."""
     from .markdown import _MdState, _finish
 
-    p = _MdState(base_url=base_url)
     events = _dom_events(root, excluded)
+    n = len(events)
+    p = _MdState(base_url=base_url)
+    regime = "direct"
     i = 0
-    for ev in events:
+    while i < n:
+        ev = events[i]
         kind = ev[0]
         if kind == "d":
-            if "&" in ev[1] or "<" in ev[1]:
-                break
-            p.handle_data(ev[1])
+            t = ev[1]
+            if "&" in t or "<" in t:
+                if (
+                    regime == "recompute"
+                    or i + 1 == n
+                    or ("<" in t and ('"' in t or "'" in t or "<!" in t))
+                ):
+                    break
+                nxt = events[i + 1]
+                if "=" in nxt[1] or (nxt[0] == "s" and any(
+                    '"' in v or ">" in v or k[:1] == "=" for k, v in nxt[2]
+                )):
+                    break
+                p.feed(t + _event_html(nxt))
+                if p.rawdata or p.cdata_elem is not None:
+                    p = _MdState(base_url=base_url)
+                    regime = "recompute"
+                    i = 0
+                    continue
+                regime = "resync"
+                i += 2
+                continue
+            p.handle_data(t)
         elif kind == "e":
             p.handle_endtag(ev[1])
         elif ev[3]:
@@ -1039,9 +1175,12 @@ def markdown_from_dom(
         else:  # the tokenizer reads each quoted value back unescaped
             p.handle_starttag(ev[1], [(k, unescape(v)) for k, v in ev[2]])
         i += 1
-    p.feed("".join(map(_event_html, events[i:])))
+    if i < n:
+        if regime != "recompute":
+            regime = "rest"
+        p.feed("".join(map(_event_html, events[i:])))
     p.feed("")
-    return _finish(p.result())
+    return _finish(p.result()), regime
 
 
 def page_text(root: _Node) -> str:

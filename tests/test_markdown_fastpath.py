@@ -1,19 +1,21 @@
 """DOM-direct markdown (scrape.markdown_from_dom): byte-identical to
 the serialize->reparse string path ``html_to_markdown(cleaned_html)``
-on every page, pages whose rest it runs through the tokenizer from the
-first unsafe event on included."""
+on every page, in each of its regimes: direct dispatch only, unsafe
+text runs tokenized with the tag after them and resynced, and the rest
+of the page tokenized (or the page made again) where a run may not
+resync."""
 
 import pytest
 
 from crawl4ai_spark.functions.markdown import html_to_markdown
 from crawl4ai_spark.functions.scrape import (
-    _dom_events,
     cleaned_html,
     markdown_from_dom,
     parse_dom,
     scrape_one,
 )
 from crawl4ai_spark.synth import generate_pages
+from scripts.markdown_differential import COUNTEREXAMPLES, differential
 
 
 def _both(html: str, url: str = "https://x.test/"):
@@ -64,8 +66,9 @@ def test_edge_cases_byte_identity(html):
     "<p>x &amp</p>",              # '&amp' without ';' at the page end
     "<p>&lt;script&gt;</p><p>hidden</p><p>&lt;/script&gt;after</p>",
     "<p>&lt;!--</p><b>in comment</b><p>--&gt;out</p>",
-    # the tokenizer reads past the next tag, so the rest of the page
-    # must go through one feed() like the whole string
+    # the tokenizer reads past the next tag on these, so a resync
+    # precondition or post-feed check must send them to one feed() of
+    # the rest of the page, like the whole string
     "<em>&lt;![x</em>tail<p>b</p>",             # garbage '<![' section
     "<p>&lt;b x = '</p><p>y</p><p>it's</p>",   # quote opened by text
     "&amp;#zz&amp;#zz&amp;#zz<p title='x;y'>",  # three '&#' bails
@@ -113,9 +116,19 @@ def test_scrape_one_contract_unchanged():
     assert r2["cleaned_html"] is None and r2["_root"] is not None
 
 
+@pytest.mark.parametrize("html", COUNTEREXAMPLES)
+def test_resync_counterexamples(html):
+    """Pages on which dropping one resync precondition or post-feed
+    check makes the output differ from the oracle."""
+    fast, slow = _both(html)
+    assert fast == slow
+
+
 def test_abs_url_matches_urljoin():
-    """_abs_url fast path must equal urljoin on every shape it
-    accepts (structured fuzz over scheme/host/path combinations)."""
+    """_abs_url's fast paths must equal urljoin on every shape they
+    accept and on the shapes next to them (structured fuzz over
+    scheme/host/path combinations, and root-relative hrefs against
+    http(s) and other bases)."""
     import itertools
     from urllib.parse import urljoin
 
@@ -141,67 +154,48 @@ def test_abs_url_matches_urljoin():
         for href in relatives:
             assert _abs_url(b, href) == urljoin(b, href), (b, href)
 
+    root_paths = ["/", "/p", "/p/", "/p/q.html", "/.hidden", "/a/.b/c",
+                  "/./x", "/a/../b", "/a/.", "/a/..", "/..", "/.",
+                  "/p;params", "/p;", "/a;x/b", "/a/..;x", "/p%20a",
+                  "/a//b", "/a/", "/a:b", "//host/p", "///x", "/p ",
+                  "/p\ta", "/p\na", "/\rp", "/ü/x", "/a\\b"]
+    root_suffixes = ["", "?q=1&r=2", "?", "?q#", "#f", "#", "?a?b",
+                     "?u=http://x//y", "?x=/../y", "?;p", " ", "?q\t"]
+    root_bases = [
+        "https://base.example/dir/page.html", "http://b/x?q=1#f",
+        "HTTPS://Up.Example/x", "http://u:p@h.example:8443/a/b",
+        "http://[::1]:8080/", "https://h.example", "http:///x",
+        "file:///etc/x", "mailto:a@b.example", "ftp://f.example/x",
+        "", "relative/base", "http://h\tx.example/",
+    ]
+    for b in root_bases:
+        for p, suf in itertools.product(root_paths, root_suffixes):
+            href = p + suf
+            assert _abs_url(b, href) == urljoin(b, href), (b, href)
+
+
+def test_abs_url_root_relative_skips_urljoin(monkeypatch):
+    """The shapes extract_web pages are made of never reach urljoin."""
+    from crawl4ai_spark.functions import scrape
+
+    def no_urljoin(base, href):
+        raise AssertionError(href)
+
+    monkeypatch.setattr(scrape, "urljoin", no_urljoin)
+    base = "HTTPS://u@H.example:8443/a/b.html?x#y"
+    for href in ["/", "/p", "/doc/7?lang=en&src=s1&pos=3", "/.hidden/x",
+                 "/a:b", "/p%20a", "/p "]:
+        assert scrape._abs_url(base, href) == "https://u@H.example:8443" + href
+    assert scrape._abs_url(base, "https://o.example/x") == "https://o.example/x"
+
 
 def test_random_markup_differential():
-    """Randomized differential: on arbitrary generated markup,
-    tokenizer boundary cases included, markdown_from_dom matches the
-    string path byte for byte."""
-    import random
-
-    rng = random.Random(20260819)
-    tags = ["div", "p", "span", "b", "em", "h2", "li", "ul", "a", "pre",
-            "td", "tr", "table", "blockquote", "code", "br", "img", "hr",
-            "textarea", "title"]
-    texts = ["plain", "two words", "  spaced  ", "*md*", "[x]", "a_b",
-             "AT&amp;T", "1 &lt; 2", "tail\n", "\tindent", "end.",
-             "entity &copy; here", "&#65;num", "AT&amp;Tend.", "x &amp",
-             "&amp;", "&lt;", "&lt;b&gt;", "&lt;/b&gt;", "&lt;i",
-             "&lt;script&gt;", "&lt;/script&gt;", "&lt;!--", "--&gt;",
-             "&lt;![CDATA[", "]]&gt;", "&lt;?pi", "&lt;!x", "&lt;/",
-             "&quot;q&quot;", "'", "a;b", "&amp;#12", "]&gt;", "&lt;b y=",
-             # the tokenizer reads past the next tag on these
-             "&amp;#", "&amp;#zz", "&amp;#x", "&amp;#1a", "&lt;![x",
-             "&lt;b x='"]
-    attrs = [("href", "https://a.example/x"), ("href", "rel/path"),
-             ("src", "i.png"), ("title", "t"), ("class", "c d"),
-             ("title", 'q"uote'), ("href", "x?a=1&amp;b=2"),
-             ("href", "x?a=1&amp;copy=2"), ("alt", "&amp;lt;b&amp;gt;"),
-             ("alt", ""), ("id", "z"), ("title", "a&lt;b"),
-             ("title", "a>b"), ("title", "x;y"), ("title", "&amp;#zz"),
-             ("title", "a&quot; z='q"), ("title", "a--&gt;b"),
-             ("data-x", "it's")]
-
-    def gen(depth):
-        n = rng.randint(1, 4)
-        parts = []
-        for _ in range(n):
-            if depth > 3 or rng.random() < 0.4:
-                parts.append(rng.choice(texts))
-                continue
-            t = rng.choice(tags)
-            a = ""
-            if rng.random() < 0.5:
-                k, v = rng.choice(attrs)
-                a = f' {k}="{v}"'
-            if t in ("br", "img", "hr"):
-                parts.append(f"<{t}{a}>")
-            else:
-                parts.append(f"<{t}{a}>{gen(depth + 1)}</{t}>")
-        return "".join(parts)
-
-    def unsafe(ev):  # where markdown_from_dom starts feeding the rest
-        if ev[0] == "s":
-            return any('"' in v for _, v in ev[2])
-        return ev[0] == "d" and ("&" in ev[1] or "<" in ev[1])
-
-    direct = replayed = 0
-    for _ in range(2000):
-        html = gen(0)
-        fast, slow = _both(html)
-        assert fast == slow, html
-        if any(map(unsafe, _dom_events(parse_dom(html), frozenset()))):
-            replayed += 1
-        else:
-            direct += 1
-    # both regimes must actually be exercised
-    assert min(direct, replayed) > 200, (direct, replayed)
+    """Randomized differential (the generator of
+    scripts/markdown_differential.py, tokenizer boundary cases included):
+    markdown_from_dom matches the string path byte for byte, and each
+    regime is exercised."""
+    mismatches, regimes = differential(seeds=3, pages=2500)
+    assert mismatches == []
+    assert regimes["direct"] > 200, regimes
+    assert regimes["resync"] > 200, regimes
+    assert regimes["rest"] + regimes["recompute"] > 200, regimes
